@@ -143,8 +143,9 @@ object Bench {
     val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8").toInt.max(1)
     // state-store provider A/B (r12 verdict item 7): the 32-partition
     // protocol point is dominated by per-trigger state-store commit
-    // fixed cost (TriggerProbe: ~8.5 s per extra micro-batch), so the
-    // provider choice is re-evaluated THERE, not at toy state sizes.
+    // fixed cost (PLANS.md "stream_join_outer trigger sizing": ~8.5 s
+    // per extra micro-batch), so the provider choice is re-evaluated
+    // THERE, not at toy state sizes.
     // The GRAFT default (Graft.session) is RocksDB + changelog
     // checkpointing — the 100 TB off-heap-state posture;
     // SPARK_GRAFT_STREAM_STATESTORE=hdfs flips the stream family's
@@ -351,10 +352,11 @@ object Bench {
       //
       // STREAM family runs at bench-scale state partitioning: its
       // wall time is micro-batch machinery (state-store commits ×
-      // shuffle partitions per trigger — TriggerProbe measured
-      // ~8.5 s per extra micro-batch at 32 partitions), so at the
-      // gate corpus the 32-partition default times mostly fixed-cost
-      // noise and same-code sweeps drifted up to 2.7× round-over-round
+      // shuffle partitions per trigger — PLANS.md "stream_join_outer
+      // trigger sizing" measured ~8.5 s per extra micro-batch at 32
+      // partitions), so at the gate corpus the 32-partition default
+      // times mostly fixed-cost noise and same-code sweeps drifted up
+      // to 2.7× round-over-round
       // (r9 stream_wide). Partitioning is a conf, not a plan property —
       // production sizes it to the cluster, the bench sizes it to the
       // corpus. Batch queries keep the sweep default so their shuffle

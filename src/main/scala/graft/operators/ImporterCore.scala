@@ -2,18 +2,12 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Portable._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.streaming.StreamImport
+import graft.streaming.StreamImport.TransferRow
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-
-/** The materialized Transfer entity (the reference's
-  * entity/transfer/Transfer.java row, the columns this corpus can
-  * populate) — typed read-side surface for Dataset users.
-  */
-case class Transfer(transfer_key: Long, tenant: String,
-  started_ms: Long, completed_ms: Long, amount: String,
-  last_click_value: String, status: String, n_events: Long)
 
 /** Batch re-expression of the reference importer's record-stream
   * semantics (SURVEY.md §2 "Importer core") over the `events` table —
@@ -31,38 +25,32 @@ case class Transfer(transfer_key: Long, tenant: String,
   *     NatsConsumer.listen via JsonPathReader; here `get_json_object`).
   *   - `ts`         = record timestamp (exposed as `ts_ms`).
   *
+  * The four entities (Transfer, wide Transfer, TransactionRequest,
+  * Batch) are not defined here: each build runs its streaming fold
+  * (`StreamImport.transferFold` / `wideFold` / `txnreqFold` /
+  * `batchFold`, where the reference mapping lives) through
+  * `StreamImport.entityBatch`, so batch and stream share one rule
+  * set and only the `*Sql` oracles stay independent.
+  *
   * Scale posture: every materialization is ONE shuffle on the entity
-  * key with map-side partial aggregation; dedups are window
-  * `row_number` (single shuffle on the dedup key); the parent remap's
-  * join strategy is AQE's call (the parent side is unbounded).
+  * key with map-side partial aggregation (the folds' pre-fold for the
+  * entities); dedups are window `row_number` (single shuffle on the
+  * dedup key); the parent remap's join strategy is AQE's call (the
+  * parent side is unbounded).
   */
 object ImporterCore {
 
   private val VarTypes = Seq("click", "view", "purchase")
 
-  /** Deterministic arg-max: value at the greatest (ts, event_id) among
-    * rows matching `cond`. Spark orders a (ts_ms, event_id) STRUCT
-    * lexicographically — no composite-bigint encoding, so no overflow
-    * when event_id crosses 1e6 (the round-1 `ts*1e6+id` key silently
-    * corrupted there). DuckDB's arg_max can't order by a row value, so
-    * the oracle uses the zero-padded fixed-width string rendering of
-    * the same pair — lexicographic string order equals numeric order
-    * for non-negative fixed-width integers.
-    * Both the value and ordering args are null unless `cond`, because
-    * DuckDB's arg_max skips null VALUES while Spark's max_by skips
-    * only null orderings — guarding both sides makes them agree.
-    */
-  private def lastBy(cond: Column, value: Column, ord: Column): Column =
-    max_by(when(cond, value), when(cond, ord))
-
-  private def ordKey: Column = struct(col("ts_ms"), col("event_id"))
-
-  /** Oracle-side rendering of [[ordKey]]. The zero-padded fixed-width
-    * printf is order-preserving ONLY for non-negative inputs (a '-'
-    * sign sorts before digits and breaks lexicographic-equals-numeric
-    * silently), while Spark's struct ordering handles negatives fine —
-    * so the oracle CHECKs non-negativity loudly (DuckDB `error()`):
-    * a future corpus with negative ts/ids fails the gate instead of
+  /** Oracle-side rendering of the (ts_ms, event_id) record ord that
+    * every last-write field is ordered by. DuckDB's arg_max can't order
+    * by a row value, so the oracles use the zero-padded fixed-width
+    * string rendering of the pair — lexicographic string order equals
+    * numeric order for non-negative fixed-width integers, and the
+    * folds compare the pair itself. The printf is order-preserving
+    * ONLY for non-negative inputs (a '-' sign sorts before digits), so
+    * the oracle CHECKs non-negativity loudly (DuckDB `error()`): a
+    * future corpus with negative ts/ids fails the gate instead of
     * mis-ranking.
     */
   private def ordKeySqlOf(ms: String, id: String): String =
@@ -316,32 +304,22 @@ object ImporterCore {
       |      FROM events GROUP BY user_id) p USING (user_id)
       |ORDER BY e.event_id""".stripMargin
 
-  /** Full Transfer materialization: lifecycle + payload pivot +
-    * status state machine + tenant, in a SINGLE shuffled groupBy on
-    * the instance key (SURVEY.md §4: one shuffle per entity build) —
-    * the batch equivalent of RecordParser + VariableParser +
-    * InflightTransferManager composing one Transfer row per instance.
-    */
+  /** The Transfer entity: `StreamImport.transferFold`. */
   def impEntityTransfers(spark: SparkSession, dir: String): DataFrame =
     transfers(spark, dir).orderBy("transfer_key")
 
   /** The transfers entity as a reusable (un-sorted) DataFrame — the
-    * read-side Specs queries filter this. ONE copy of the entity
-    * rules: the same state + render pair the incremental path merges
-    * through (state over the full corpus, merged with nothing, is the
-    * identity).
+    * read-side Specs queries filter this.
     */
   def transfers(spark: SparkSession, dir: String): DataFrame =
-    renderTransferState(transferStateOf(Tables.events(spark, dir)))
+    transfersTyped(spark, dir).toDF()
 
-  /** Typed read-side surface: `Dataset[Transfer]` with the case-class
-    * Encoder — the JPA-entity-shaped API a reference user queries
-    * (compose with Specs for the filter surface).
+  /** Typed read-side surface: `Dataset[TransferRow]` — the
+    * JPA-entity-shaped API a reference user queries (compose with
+    * Specs for the filter surface).
     */
-  def transfersTyped(spark: SparkSession, dir: String): org.apache.spark.sql.Dataset[Transfer] = {
-    import spark.implicits._
-    transfers(spark, dir).as[Transfer]
-  }
+  def transfersTyped(spark: SparkSession, dir: String): Dataset[TransferRow] =
+    StreamImport.entityBatch(Tables.events(spark, dir), StreamImport.transferFold)
 
   /** Shared oracle CTE body for the transfers entity. */
   def transfersSqlCte: String =
@@ -365,30 +343,6 @@ object ImporterCore {
        |$transfersSqlCte)
        |SELECT * FROM t ORDER BY transfer_key""".stripMargin
 
-  /** Partial entity state over an event SLICE — every aggregate is a
-    * commutative monoid (min / max / decimal sum / struct-argmax /
-    * flag-or / count), so slice states MERGE with the same operators
-    * and `merge(state(A), state(B)) == state(A ∪ B)` exactly. Kept
-    * un-coalesced (nulls = "no contribution yet") so the merge stays
-    * a plain re-aggregation.
-    */
-  private[graft] def transferStateOf(events: DataFrame): DataFrame = {
-    val isFatal = col("event_type") === "error" &&
-      get_json_object(col("props"), "$.k").cast(LongType) >= 90
-    events.groupBy(col("user_id")).agg(
-      min(when(col("event_type") === "signup", col("ts_ms"))).as("s_min"),
-      max(when(col("event_type") === "purchase", col("ts_ms"))).as("c_max"),
-      sum(when(col("event_type") === "purchase", dec2(col("value")))).as("amt"),
-      // struct max = argmax by (ts, id): the unique ord pair decides
-      // before the payload field can — identical pick to lastBy
-      max(when(col("event_type") === "click",
-        struct(col("ts_ms").as("o1"), col("event_id").as("o2"),
-          dec2(col("value")).as("lc")))).as("click_pick"),
-      max(when(isFatal, 1).otherwise(0)).as("f"),
-      max(when(col("event_type") === "purchase", 1).otherwise(0)).as("c"),
-      count(lit(1)).cast(LongType).as("n"))
-  }
-
   /** The horizon between the "already imported" slice and the new
     * delta in the incremental demonstration — a stand-in for the
     * previous import run's high-water mark (mid-corpus; both slices
@@ -398,50 +352,26 @@ object ImporterCore {
 
   /** Incremental entity materialization — the daily-import path a
     * 100 TB deployment runs instead of recomputing history: the PRIOR
-    * slice's state (in production: the stored per-key state table,
-    * never re-read from raw events) merges with the new delta's state
-    * by re-applying the same monoid aggregates, then renders exactly
-    * like [[transfers]]. Cost per import = one groupBy over
-    * |prior state ∩ touched keys| + |delta| rows, independent of
+    * slice's fold partials (in production: the stored per-key state
+    * table, never re-read from raw events) merge with the new delta's
+    * partials through the fold's own `merge`, then render exactly like
+    * [[transfers]]. Cost per import = one shuffle over
+    * |prior state ∩ touched keys| + |delta partials|, independent of
     * history length.
     *
     * The oracle is the FULL-corpus entity SQL — the gate proves
-    * merge(state(prior), state(delta)) is bit-identical to
+    * merge(fold(prior), fold(delta)) is bit-identical to
     * recomputation, which is the property that licenses the
     * incremental design.
     */
   def impEntityIncremental(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val prior = transferStateOf(ev.filter(col("ts_ms") < IncrementalPivotMs))
-    val delta = transferStateOf(ev.filter(col("ts_ms") >= IncrementalPivotMs))
-    renderTransferState(mergeTransferState(prior.unionByName(delta)))
+    val fold = StreamImport.transferFold
+    val prior = StreamImport.partials(ev.filter(col("ts_ms") < IncrementalPivotMs), fold)
+    val delta = StreamImport.partials(ev.filter(col("ts_ms") >= IncrementalPivotMs), fold)
+    StreamImport.mergePartials(prior.union(delta), fold).toDF()
       .orderBy("transfer_key")
   }
-
-  /** Merge partial states: the SAME monoid operators re-applied. */
-  private[graft] def mergeTransferState(states: DataFrame): DataFrame =
-    states.groupBy("user_id").agg(
-      min("s_min").as("s_min"), max("c_max").as("c_max"),
-      sum("amt").as("amt"), max("click_pick").as("click_pick"),
-      max("f").as("f"), max("c").as("c"),
-      sum("n").cast(LongType).as("n"))
-
-  /** State → the entity row shape [[transfers]] produces (same
-    * columns, same rendering; the shared oracle pins the two paths
-    * together).
-    */
-  private[graft] def renderTransferState(state: DataFrame): DataFrame =
-    state.select(
-      col("user_id").as("transfer_key"),
-      concat(lit("t"), (col("user_id") % 10).cast(LongType)).as("tenant"),
-      coalesce(col("s_min"), lit(-1L)).as("started_ms"),
-      coalesce(col("c_max"), lit(-1L)).as("completed_ms"),
-      coalesce(moneyStr(col("amt")), lit("")).as("amount"),
-      coalesce(moneyStr(col("click_pick.lc")), lit("")).as("last_click_value"),
-      when(col("f") === 1, "FAILED")
-        .when(col("c") === 1, "COMPLETED")
-        .otherwise("IN_PROGRESS").as("status"),
-      col("n").as("n_events"))
 
   /** The `variables` append table (the reference's per-record variable
     * log: workflowKey, workflowInstanceKey, timestamp, name, value —
@@ -493,280 +423,13 @@ object ImporterCore {
       |  event_type AS element_id
       |FROM events ORDER BY record_key""".stripMargin
 
-  /** Wide Transfer materialization with NESTED-JSON payload
-    * extraction — the reference's multi-level JsonPath pivot, now ALL
-    * FOUR nested registry classes plus PREPARE and the raw-string
-    * dual parser (VariableParser.java:41-52):
-    *
-    *   - `channelRequest` (:50 → parseChannelRequest:200-211) reads
-    *     `$.payer.partyIdInfo.partyIdentifier` / `$.amount.amount` as
-    *     BigDecimal — carried by signup records with payload k < 50.
-    *   - `quoteSwitchRequest` (:42 → parseQuoteSwitchRequest:139-153)
-    *     OVERLAPS channelRequest: it writes the same party/amount
-    *     columns (same JsonPaths) PLUS `$.transactionId` and the
-    *     party `fspId`s — signup records with k >= 50. The party and
-    *     amount columns are therefore last-write ACROSS the two
-    *     classes, exactly the registry's overwrite-the-entity
-    *     semantics.
-    *   - `transferResponse-CREATE` (:46 → parseTransferResponse:
-    *     174-183) parses `$.completedTimestamp` with
-    *     OperatorUtils.dateFormat `yyyy-MM-dd'T'HH:mm:ss` — purchase.
-    *   - `transferResponse-PREPARE` (:45 →
-    *     parseTransferResponsePrepare:189-198) writes the SAME
-    *     completedAt field as CREATE, so completed_ms is last-write
-    *     ACROSS both response classes — click records.
-    *   - `localQuoteResponse` (:41 →
-    *     parseTransferLocalQuoteResponse:155-166) is DIRECTION-ROUTED:
-    *     `$.fspFee.amount` (BigDecimal), `$.fspFee.currency` and
-    *     `$.quoteCode` land in the payee_* columns when the transfer's
-    *     direction is INCOMING and in the payer_* columns otherwise —
-    *     view records with k < 50; direction is the instance's static
-    *     per-process config (application.yml), stood in by user_id
-    *     parity.
-    *   - `payeeQuoteResponse` (:43 → parsePayeeQuoteResponse:168-172)
-    *     writes payee_fee / payee_fee_currency from
-    *     `$.payeeFspFee.amount` UN-routed (always the payee side) —
-    *     view records with k >= 50; payee_fee is last-write ACROSS
-    *     it and the incoming-routed localQuoteResponse, while
-    *     payee_quote_code stays localQuoteResponse-only.
-    *   - `errorInformation` (:51-52) is a DUAL parser: it stores the
-    *     raw string (parseErrorInformation:213-215) AND feeds the same
-    *     value to parseTransferCreateFailed:185-187, whose "false"
-    *     means book-funds success → status COMPLETED, anything else →
-    *     FAILED, last write wins — error records (fatal payloads carry
-    *     an error string, non-fatal the 'false' marker).
-    *   - the thirteen PLAIN set-call scalars (VariableParser.java:44,
-    *     55-69): `transactionId`, `currency`, `sourceCurrency`/
-    *     `targetCurrency`, `sourceFee`/`targetFee`,
-    *     `sourceInstitution`/`targetInstitution`, `sourceQuoteCode`/
-    *     `targetQuoteCode`, `sourceAccountType`/`targetAccountType`
-    *     and `quoteId` (:44 → setPayeeQuoteCode). Each is a bare
-    *     strip()-and-set onto an entity column the nested classes also
-    *     write, so those columns are last-write ACROSS nested and
-    *     scalar writers. Carried by the k >= 90 sub-range of each
-    *     record class (sub-routed by event_id mod the class's scalar
-    *     count); fees parse as BigDecimal like the registry's
-    *     `new BigDecimal(strip(value))`.
-    *
-    * The events corpus carries flat payloads, so each engine
-    * synthesizes the nested variable payloads row-locally from the
-    * record (both build their own JSON — the gate compares EXTRACTION
-    * semantics: multi-level paths, decimal amounts/fees, parsed
-    * timestamps, direction routing). Last write per variable name
-    * wins, ordered by (ts, event_id).
-    *
-    * Plan shape: JSON synth + ONE from_json per record class are
-    * row-local; the pivot is a single shuffled groupBy on the
-    * instance key.
+  /** The wide Transfer entity (nested-JSON registry classes and plain
+    * scalars): `StreamImport.wideFold`; the build drops the fold's
+    * sink-routing `tenant`.
     */
-  def impEntityWide(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val chanSchema = StructType(Seq(
-      StructField("payer", StructType(Seq(StructField("partyIdInfo", StructType(Seq(
-        StructField("partyIdType", StringType),
-        StructField("partyIdentifier", StringType))))))),
-      StructField("payee", StructType(Seq(StructField("partyIdInfo", StructType(Seq(
-        StructField("partyIdType", StringType),
-        StructField("partyIdentifier", StringType))))))),
-      StructField("amount", StructType(Seq(
-        StructField("amount", StringType),
-        StructField("currency", StringType))))))
-    val respSchema = StructType(Seq(
-      StructField("completedTimestamp", StringType),
-      StructField("transferState", StringType)))
-    val quoteSchema = StructType(Seq(
-      StructField("fspFee", StructType(Seq(
-        StructField("amount", StringType),
-        StructField("currency", StringType)))),
-      StructField("quoteCode", StringType)))
-    val prepSchema = StructType(Seq(
-      StructField("completedTimestamp", StringType)))
-    val qswSchema = StructType(Seq(
-      StructField("transactionId", StringType),
-      StructField("payer", StructType(Seq(StructField("partyIdInfo", StructType(Seq(
-        StructField("partyIdType", StringType),
-        StructField("partyIdentifier", StringType),
-        StructField("fspId", StringType))))))),
-      StructField("payee", StructType(Seq(StructField("partyIdInfo", StructType(Seq(
-        StructField("partyIdType", StringType),
-        StructField("partyIdentifier", StringType),
-        StructField("fspId", StringType))))))),
-      StructField("amount", StructType(Seq(
-        StructField("amount", StringType),
-        StructField("currency", StringType))))))
-    val pqSchema = StructType(Seq(
-      StructField("payeeFspFee", StructType(Seq(
-        StructField("amount", StringType),
-        StructField("currency", StringType))))))
-    val chanJson = to_json(struct(
-      struct(struct(lit("MSISDN").as("partyIdType"),
-        concat(lit("277"), (col("user_id") % 100).cast(LongType)).as("partyIdentifier")).as("partyIdInfo")).as("payer"),
-      struct(struct(lit("ACCOUNT_ID").as("partyIdType"),
-        concat(lit("acct-"), (col("user_id") % 50).cast(LongType)).as("partyIdentifier")).as("partyIdInfo")).as("payee"),
-      struct(dec2(col("value")).cast(org.apache.spark.sql.types.StringType).as("amount"),
-        when(col("user_id") % 2 === 0, "USD").otherwise("KES").as("currency")).as("amount")))
-    val respJson = to_json(struct(
-      date_format(timestamp_millis(col("ts_ms")), "yyyy-MM-dd'T'HH:mm:ss").as("completedTimestamp"),
-      lit("COMMITTED").as("transferState")))
-    val quoteJson = to_json(struct(
-      struct(dec2(col("value")).cast(org.apache.spark.sql.types.StringType).as("amount"),
-        when(col("event_id") % 2 === 0, "USD").otherwise("TZS").as("currency")).as("fspFee"),
-      concat(lit("LQ-"), (col("event_id") % 1000).cast(LongType)).as("quoteCode")))
-    val prepJson = to_json(struct(
-      date_format(timestamp_millis(col("ts_ms")), "yyyy-MM-dd'T'HH:mm:ss").as("completedTimestamp")))
-    // missing $.k coalesces to 0 — ONE class-routing rule shared with
-    // the oracle CTE and the streaming fold (toRecs reads absent k as
-    // 0), so a k-less record is a channelRequest/localQuoteResponse on
-    // every path instead of three divergent behaviors.
-    // kPayload reads the PROJECTED `kp` column (added below the
-    // routing flags): inlining the get_json_object expression here
-    // replicated the JSON parse into every routing flag, scalar
-    // string and aggregate update expression that mentions it — the
-    // r18 plan audit counted ~200 occurrences in this query's
-    // physical plan; as a multi-referenced non-cheap projection it
-    // now evaluates once per row and everything downstream is
-    // attribute arithmetic
-    val kPayload = col("kp")
-    val qswJson = to_json(struct(
-      concat(lit("txn-"), col("user_id"), lit("-"), (col("event_id") % 100).cast(LongType)).as("transactionId"),
-      struct(struct(lit("IBAN").as("partyIdType"),
-        concat(lit("PI"), (col("user_id") % 77).cast(LongType)).as("partyIdentifier"),
-        concat(lit("fsp"), (kPayload % 10).cast(LongType)).as("fspId")).as("partyIdInfo")).as("payer"),
-      struct(struct(lit("MSISDN").as("partyIdType"),
-        concat(lit("266"), (col("user_id") % 99).cast(LongType)).as("partyIdentifier"),
-        concat(lit("fsp"), ((kPayload + 1) % 10).cast(LongType)).as("fspId")).as("partyIdInfo")).as("payee"),
-      struct(dec2(col("value")).cast(org.apache.spark.sql.types.StringType).as("amount"),
-        when(kPayload % 2 === 0, "EUR").otherwise("GHS").as("currency")).as("amount")))
-    val pqJson = to_json(struct(
-      struct(dec2(col("value")).cast(org.apache.spark.sql.types.StringType).as("amount"),
-        when(col("event_id") % 2 === 0, "XOF").otherwise("NGN").as("currency")).as("payeeFspFee")))
-    val isChan = col("event_type") === "signup" && kPayload < 50
-    val isSwitch = col("event_type") === "signup" && kPayload >= 50 && kPayload < 90
-    val isParty = col("event_type") === "signup" && kPayload < 90 // chan OR switch
-    val isResp = col("event_type") === "purchase" && kPayload < 90
-    val isQuote = col("event_type") === "view" && kPayload < 50
-    val isPayeeQ = col("event_type") === "view" && kPayload >= 50 && kPayload < 90
-    val isPrep = col("event_type") === "click" && kPayload < 90
-    val isErr = col("event_type") === "error"
-    // the PLAIN set-call scalar registry (VariableParser.java:44,
-    // 55-69): thirteen variables whose value is the stripped string
-    // itself, no JSON — carried by the k >= 90 sub-range of each
-    // record class, sub-routed by k mod the class's scalar count.
-    // Each writes an EXISTING entity column, so those columns are
-    // last-write ACROSS nested-class and scalar writers.
-    val scalA = col("event_type") === "signup" && kPayload >= 90 // %4: transactionId currency sourceAccountType targetAccountType
-    val scalB = col("event_type") === "purchase" && kPayload >= 90 // %3: sourceFee targetFee quoteId
-    val scalC = col("event_type") === "click" && kPayload >= 90 // %2: sourceInstitution targetInstitution
-    val scalD = col("event_type") === "view" && kPayload >= 90 // %4: sourceCurrency targetCurrency sourceQuoteCode targetQuoteCode
-    // value moduli are coprime-ish to the sub-route moduli (%3 vs %4,
-    // k%10 vs event_id%2) so each scalar's value VARIES across the
-    // records routed to it
-    val scalarTxnId = concat(lit("ptx-"), col("user_id"), lit("-"), (col("event_id") % 100).cast(LongType))
-    val scalarCurrency = when(col("event_id") % 3 === 0, "MWK")
-      .when(col("event_id") % 3 === 1, "ZMW").otherwise("UGX")
-    val scalarSrcAcctType = when(col("event_id") % 3 === 0, "MSISDN")
-      .when(col("event_id") % 3 === 1, "IBAN").otherwise("ACCOUNT_ID")
-    val scalarTgtAcctType = when(col("event_id") % 3 === 0, "ALIAS")
-      .when(col("event_id") % 3 === 1, "MSISDN").otherwise("IBAN")
-    val scalarQuoteId = concat(lit("QID-"), (col("event_id") % 1000).cast(LongType))
-    val scalarSrcInst = concat(lit("inst-"), (kPayload % 10).cast(LongType))
-    val scalarTgtInst = concat(lit("tinst-"), (kPayload % 10).cast(LongType))
-    val scalarSrcCur = when(col("event_id") % 3 === 0, "TZS")
-      .when(col("event_id") % 3 === 1, "XOF").otherwise("GMD")
-    val scalarTgtCur = when(col("event_id") % 3 === 0, "NGN")
-      .when(col("event_id") % 3 === 1, "KES").otherwise("ETB")
-    val scalarSrcQuote = concat(lit("SQ-"), (col("event_id") % 1000).cast(LongType))
-    val scalarTgtQuote = concat(lit("TQ-"), (col("event_id") % 1000).cast(LongType))
-    // errorInformation's raw string value: an error string for fatal
-    // payloads, the reference's "false" book-funds-success marker
-    // otherwise
-    val errStr = when(kPayload >= 90, concat(lit("err-"), kPayload)).otherwise("false")
-    // direction stand-in for the per-process static config the
-    // reference routes localQuoteResponse on (Inflight*Manager sets it
-    // once at instance start)
-    val incoming = col("user_id") % 2 === 0
-    val parsed = Tables.events(spark, dir)
-      .withColumn("kp",
-        coalesce(get_json_object(col("props"), "$.k").cast(LongType), lit(0L)))
-      .withColumn("chan", when(isChan, from_json(chanJson, chanSchema)))
-      .withColumn("qsw", when(isSwitch, from_json(qswJson, qswSchema)))
-      .withColumn("resp", when(isResp, from_json(respJson, respSchema)))
-      .withColumn("quote", when(isQuote, from_json(quoteJson, quoteSchema)))
-      .withColumn("pq", when(isPayeeQ, from_json(pqJson, pqSchema)))
-      .withColumn("prep", when(isPrep, from_json(prepJson, prepSchema)))
-    val dec182 = org.apache.spark.sql.types.DecimalType(18, 2)
-    // party/amount columns: channelRequest and quoteSwitchRequest
-    // write the SAME entity fields — last write across BOTH classes
-    def partyVal(path: String) =
-      when(isChan, col(s"chan.$path")).otherwise(col(s"qsw.$path"))
-    val feeDec = col("quote.fspFee.amount").cast(dec182)
-    // payee fee: incoming-routed localQuoteResponse OR the un-routed
-    // payeeQuoteResponse, whichever wrote last
-    val payeeFeeCond = (isQuote && incoming) || isPayeeQ
-    val payeeFeeVal = when(isQuote, feeDec).otherwise(col("pq.payeeFspFee.amount").cast(dec182))
-    val payeeFeeCur = when(isQuote, col("quote.fspFee.currency")).otherwise(col("pq.payeeFspFee.currency"))
-    // completedTimestamp comes from whichever response class wrote last
-    val completedStr = when(isResp, col("resp.completedTimestamp"))
-      .otherwise(col("prep.completedTimestamp"))
-    parsed.groupBy(col("user_id"))
-      .agg(
-        coalesce(lastBy(isParty, partyVal("payer.partyIdInfo.partyIdentifier"), ordKey), lit("")).as("payer_party_id"),
-        coalesce(lastBy(isParty || (scalA && col("event_id") % 4 === 2),
-          when(isParty, partyVal("payer.partyIdInfo.partyIdType")).otherwise(scalarSrcAcctType),
-          ordKey), lit("")).as("payer_id_type"),
-        coalesce(lastBy(isParty, partyVal("payee.partyIdInfo.partyIdentifier"), ordKey), lit("")).as("payee_party_id"),
-        coalesce(lastBy(isParty || (scalA && col("event_id") % 4 === 3),
-          when(isParty, partyVal("payee.partyIdInfo.partyIdType")).otherwise(scalarTgtAcctType),
-          ordKey), lit("")).as("payee_id_type"),
-        coalesce(moneyStr(lastBy(isParty, partyVal("amount.amount").cast(dec182), ordKey)), lit("")).as("amount"),
-        coalesce(lastBy(isParty || (scalA && col("event_id") % 4 === 1),
-          when(isParty, partyVal("amount.currency")).otherwise(scalarCurrency),
-          ordKey), lit("")).as("currency"),
-        coalesce(lastBy(isSwitch || (scalA && col("event_id") % 4 === 0),
-          when(isSwitch, col("qsw.transactionId")).otherwise(scalarTxnId),
-          ordKey), lit("")).as("transaction_id"),
-        coalesce(lastBy(isSwitch || (scalC && col("event_id") % 2 === 0),
-          when(isSwitch, col("qsw.payer.partyIdInfo.fspId")).otherwise(scalarSrcInst),
-          ordKey), lit("")).as("payer_dfsp_id"),
-        coalesce(lastBy(isSwitch || (scalC && col("event_id") % 2 === 1),
-          when(isSwitch, col("qsw.payee.partyIdInfo.fspId")).otherwise(scalarTgtInst),
-          ordKey), lit("")).as("payee_dfsp_id"),
-        coalesce(lastBy(isResp || isPrep,
-          unix_millis(to_timestamp(completedStr, "yyyy-MM-dd'T'HH:mm:ss")), ordKey), lit(-1L)).as("completed_ms"),
-        coalesce(lastBy(isResp, col("resp.transferState"), ordKey), lit("")).as("transfer_state"),
-        coalesce(moneyStr(lastBy((isQuote && !incoming) || (scalB && col("event_id") % 3 === 0),
-          when(isQuote, feeDec).otherwise(dec2(col("value"))), ordKey)), lit("")).as("payer_fee"),
-        coalesce(lastBy((isQuote && !incoming) || (scalD && col("event_id") % 4 === 0),
-          when(isQuote, col("quote.fspFee.currency")).otherwise(scalarSrcCur),
-          ordKey), lit("")).as("payer_fee_currency"),
-        coalesce(lastBy((isQuote && !incoming) || (scalD && col("event_id") % 4 === 2),
-          when(isQuote, col("quote.quoteCode")).otherwise(scalarSrcQuote),
-          ordKey), lit("")).as("payer_quote_code"),
-        coalesce(moneyStr(lastBy(payeeFeeCond || (scalB && col("event_id") % 3 === 1),
-          when(isQuote || isPayeeQ, payeeFeeVal).otherwise(dec2(col("value"))),
-          ordKey)), lit("")).as("payee_fee"),
-        coalesce(lastBy(payeeFeeCond || (scalD && col("event_id") % 4 === 1),
-          when(isQuote || isPayeeQ, payeeFeeCur).otherwise(scalarTgtCur),
-          ordKey), lit("")).as("payee_fee_currency"),
-        coalesce(lastBy((isQuote && incoming) || (scalB && col("event_id") % 3 === 2) || (scalD && col("event_id") % 4 === 3),
-          when(isQuote, col("quote.quoteCode"))
-            .when(scalB, scalarQuoteId).otherwise(scalarTgtQuote),
-          ordKey), lit("")).as("payee_quote_code"),
-        coalesce(lastBy(isErr, errStr, ordKey), lit("")).as("error_information"),
-        coalesce(lastBy(isErr,
-          when(errStr === "false", "COMPLETED").otherwise("FAILED"), ordKey),
-          lit("IN_PROGRESS")).as("status"))
-      .select(col("user_id").as("transfer_key"),
-        col("payer_party_id"), col("payer_id_type"),
-        col("payee_party_id"), col("payee_id_type"),
-        col("amount"), col("currency"),
-        col("transaction_id"), col("payer_dfsp_id"), col("payee_dfsp_id"),
-        col("completed_ms"), col("transfer_state"),
-        col("payer_fee"), col("payer_fee_currency"), col("payer_quote_code"),
-        col("payee_fee"), col("payee_fee_currency"), col("payee_quote_code"),
-        col("error_information"), col("status"))
-      .orderBy("transfer_key")
-  }
+  def impEntityWide(spark: SparkSession, dir: String): DataFrame =
+    StreamImport.entityBatch(Tables.events(spark, dir), StreamImport.wideFold)
+      .drop("tenant").orderBy("transfer_key")
 
   def impEntityWideSql: String = {
     def pick(cond: String, value: String, default: String): String =
@@ -946,89 +609,10 @@ object ImporterCore {
        |FROM events GROUP BY 1, 2 ORDER BY process_id""".stripMargin
   }
 
-  /** TransactionRequest materialization: unlike Transfer's monotone
-    * flags, `transactionState` is LAST-WRITE-WINS — every parser call
-    * overwrites the current state
-    * (VariableParser.parsePartyLookUpState:124-133,
-    * parseTransactionFailed:113-122, parseSettlementFiled:102-111,
-    * parseTransactionRequestFailed:247-250; each maps its payload to a
-    * TransactionRequestState and setState()s it). Batch semantics:
-    * the final state is the signal carried by the latest
-    * state-carrying record. Signal mapping on the events stream:
-    * signup → RECEIVED, view → party lookup (fatal ⇒ FAILED else
-    * RECEIVED), click → transaction progress (fatal ⇒ FAILED,
-    * k ∈ [80,90) ⇒ REJECTED — parseTransactionRequestResponse's
-    * reject arm, TransactionRequestState.java:7 — else IN_PROGRESS),
-    * purchase → settlement (fatal ⇒ FAILED else ACCEPTED), error →
-    * request-failed only when fatal (non-fatal errors carry no
-    * signal, like parseTransactionRequestFailed's "true"-only write).
-    * All five reference states are reachable.
-    *
-    * Scalar column breadth (VariableParser.java:71-83): `authType`
-    * from the transactionRequest record (:71; parseTransactionRequest
-    * :268-269 defaults a null authenticationType to NONE) — carried
-    * here by signup; `partyLookupFspId` → payer_dfsp_id (:73) —
-    * view; `initiatorFspId` → payee_dfsp_id (:74) is
-    * DIRECTION-GUARDED (parseInitiatorFspId:285-289 writes only when
-    * the request's direction is OUTGOING, odd user_id in the gate's
-    * parity stand-in) — click; `mpesaChannelRequest` (:83 →
-    * parseTransactionMpesaRequest:236-240) overwrites initiatorType
-    * and scenario from `$.transactionType.*` — carried by non-fatal
-    * error records (fatal ones are the request-failed signal). All
-    * last-write-wins by (ts, event_id).
-    */
-  def impEntityTxnreq(spark: SparkSession, dir: String): DataFrame = {
-    // k is coalesced to 0 because it feeds VALUE-producing columns
-    // (auth_type, dfsp ids): Spark's null-propagating concat and
-    // DuckDB's null-skipping CONCAT would otherwise render a missing
-    // $.k differently, and the streaming fold already reads a missing
-    // k as 0 — one rule everywhere
-    // k reads the projected `kp` column (see impEntityWide — the
-    // inlined JSON parse replicated into every aggregate expression)
-    val k = col("kp")
-    val fatal = k >= 90
-    val signal =
-      when(col("event_type") === "signup", "RECEIVED")
-        .when(col("event_type") === "view", when(fatal, "FAILED").otherwise("RECEIVED"))
-        .when(col("event_type") === "click",
-          when(fatal, "FAILED").when(k >= 80, "REJECTED").otherwise("IN_PROGRESS"))
-        .when(col("event_type") === "purchase", when(fatal, "FAILED").otherwise("ACCEPTED"))
-        .when(col("event_type") === "error" && fatal, "FAILED")
-        .otherwise(lit(null))
-    val authType = when(k % 3 === 0, "NONE").when(k % 3 === 1, "OTP").otherwise("BIO")
-    val outgoing = col("user_id") % 2 =!= 0
-    Tables.events(spark, dir)
-      .withColumn("kp",
-        coalesce(get_json_object(col("props"), "$.k").cast(LongType), lit(0L)))
-      .withColumn("sig", signal)
-      .groupBy(col("user_id"))
-      .agg(
-        coalesce(lastBy(col("sig").isNotNull, col("sig"), ordKey), lit("IN_PROGRESS")).as("state"),
-        coalesce(min(when(col("event_type") === "signup", col("ts_ms"))), lit(-1L)).as("started_ms"),
-        coalesce(max(when(col("event_type") === "purchase", col("ts_ms"))), lit(-1L)).as("completed_ms"),
-        coalesce(moneyStr(sum(when(col("event_type") === "purchase", dec2(col("value"))))), lit("")).as("amount"),
-        coalesce(lastBy(col("event_type") === "signup", authType, ordKey), lit("NONE")).as("auth_type"),
-        coalesce(lastBy(col("event_type") === "view",
-          concat(lit("dfsp-"), (k % 10).cast(LongType)), ordKey), lit("")).as("payer_dfsp_id"),
-        coalesce(lastBy(col("event_type") === "click" && outgoing,
-          concat(lit("fsp-"), (k % 10).cast(LongType)), ordKey), lit("")).as("payee_dfsp_id"),
-        coalesce(lastBy(col("event_type") === "error" && !fatal,
-          when(k % 3 === 0, "CONSUMER").when(k % 3 === 1, "AGENT").otherwise("BUSINESS"),
-          ordKey), lit("")).as("initiator_type"),
-        coalesce(lastBy(col("event_type") === "error" && !fatal,
-          when(k % 4 === 0, "DEPOSIT").when(k % 4 === 1, "WITHDRAWAL")
-            .when(k % 4 === 2, "TRANSFER").otherwise("PAYMENT"),
-          ordKey), lit("")).as("scenario"),
-        count(lit(1)).cast(LongType).as("n_events"))
-      .select(
-        col("user_id").as("txn_key"),
-        concat(lit("t"), (col("user_id") % 10).cast(LongType)).as("tenant"),
-        col("state"), col("started_ms"), col("completed_ms"),
-        col("amount"), col("auth_type"), col("payer_dfsp_id"),
-        col("payee_dfsp_id"), col("initiator_type"), col("scenario"),
-        col("n_events"))
+  /** The TransactionRequest entity: `StreamImport.txnreqFold`. */
+  def impEntityTxnreq(spark: SparkSession, dir: String): DataFrame =
+    StreamImport.entityBatch(Tables.events(spark, dir), StreamImport.txnreqFold).toDF()
       .orderBy("txn_key")
-  }
 
   def impEntityTxnreqSql: String =
     s"""WITH sig AS (
@@ -1070,50 +654,10 @@ object ImporterCore {
        |  COUNT(*) AS n_events
        |FROM sig GROUP BY user_id ORDER BY txn_key""".stripMargin
 
-  /** Batch materialization (InflightBatchManager + batchParsers:88-91):
-    * startedAt set once / completedAt from the end record, plus the
-    * progress counters the operations UI reads (totalTransactions /
-    * ongoing / failed / completed) and the payload-derived metadata
-    * strings of the batch parser registry — batchId (:88),
-    * requestFile (`fileName` :89), requestId (:90), note (:91), the
-    * string columns last-write-wins like every registry write.
-    * Counter semantics over the events stream: sub-transactions are
-    * the click/view/purchase records; failed counts fatal errors;
-    * completed counts purchases; ongoing is the remainder. The
-    * fileName variable rides signup (the batch registration record),
-    * note rides view.
-    */
-  def impEntityBatches(spark: SparkSession, dir: String): DataFrame = {
-    // coalesced for the same reason as impEntityTxnreq: k feeds the
-    // request_file/note string columns (projected once — see
-    // impEntityWide)
-    val k = col("kp")
-    val isTxn = col("event_type").isin("click", "view", "purchase")
-    Tables.events(spark, dir)
-      .withColumn("kp",
-        coalesce(get_json_object(col("props"), "$.k").cast(LongType), lit(0L)))
-      .groupBy(col("user_id"))
-      .agg(
-        coalesce(min(when(col("event_type") === "signup", col("ts_ms"))), lit(-1L)).as("started_ms"),
-        coalesce(max(when(col("event_type") === "purchase", col("ts_ms"))), lit(-1L)).as("completed_ms"),
-        sum(when(isTxn, 1L).otherwise(0L)).cast(LongType).as("total_transactions"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).cast(LongType).as("completed"),
-        sum(when(col("event_type") === "error" && k >= 90, 1L).otherwise(0L)).cast(LongType).as("failed"),
-        coalesce(lastBy(col("event_type") === "signup",
-          concat(lit("f-"), k, lit(".csv")), ordKey), lit("")).as("request_file"),
-        coalesce(lastBy(col("event_type") === "view",
-          concat(lit("note-"), (k % 5).cast(LongType)), ordKey), lit("")).as("note"))
-      .select(
-        col("user_id").as("batch_key"),
-        concat(lit("b"), (col("user_id") % 20).cast(LongType)).as("batch_id"),
-        concat(lit("req-"), col("user_id")).as("request_id"),
-        col("request_file"), col("note"),
-        col("started_ms"), col("completed_ms"),
-        col("total_transactions"),
-        greatest(col("total_transactions") - col("completed"), lit(0L)).as("ongoing"),
-        col("failed"), col("completed"))
+  /** The Batch entity: `StreamImport.batchFold`. */
+  def impEntityBatches(spark: SparkSession, dir: String): DataFrame =
+    StreamImport.entityBatch(Tables.events(spark, dir), StreamImport.batchFold).toDF()
       .orderBy("batch_key")
-  }
 
   def impEntityBatchesSql: String =
     s"""WITH b AS (

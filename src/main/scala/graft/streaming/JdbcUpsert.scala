@@ -281,9 +281,9 @@ object JdbcUpsert {
     // wave 1 covers a 10% key slice of the pre-pivot entity — enough
     // to prove the UPDATE arm runs on every one of those keys without
     // doubling the (row-at-a-time, Derby-bound) MERGE cost
-    val wave1 = ImporterCore.renderTransferState(ImporterCore.transferStateOf(
-      ev.filter(col("ts_ms") < ImporterCore.IncrementalPivotMs)))
-      .filter(col("transfer_key") % 10 === 0)
+    val wave1 = StreamImport.entityBatch(
+        ev.filter(col("ts_ms") < ImporterCore.IncrementalPivotMs), StreamImport.transferFold)
+      .toDF().filter(col("transfer_key") % 10 === 0)
     upsert(url, base, wave1, "transfer_key")
     upsert(url, base, ImporterCore.transfers(spark, dir), "transfer_key")
     val out = graft.Scratch.cp(readCurrent(spark, url, base, tenantsOf(url, base)))

@@ -15,6 +15,14 @@ import org.apache.spark.sql.types.LongType
   * SURVEY.md §5) — the source is pluggable: any Dataset[Rec]-shaped
   * stream (file source in the driver path, MemoryStream in specs).
   *
+  * The [[EntityFold]]s here (Transfer, wide Transfer,
+  * TransactionRequest, Batch) are the ONE definition of each importer
+  * entity and carry its reference mapping: the streaming queries run
+  * them under a state store, and the batch builds in
+  * [[graft.operators.ImporterCore]] run them through [[entityBatch]]
+  * (the same map-side pre-fold, then a stateless merge). Only the
+  * DuckDB oracles stay independent.
+  *
   * Scale posture: state is keyed by instance (bounded per-key size,
   * no per-key growth beyond the folded aggregates), every fold is an
   * explicit commutative MONOID ([[EntityFold]]: order-insensitive
@@ -38,12 +46,19 @@ object StreamImport {
   case class Rec(event_id: Long, ts_ms: Long, user_id: Long,
     event_type: String, value: Double, k: Long)
 
-  /** Per-instance in-flight state — the batch groupBy's accumulator,
-    * folded incrementally (InflightTransferManager's entity cache,
-    * minus the repo lookups: the fold is total, not read-modify-write).
+  /** Per-instance Transfer state: lifecycle (startedAt = min signup
+    * ts, completedAt = max purchase ts —
+    * InflightTransferManager.transferStarted/Ended), payload pivot
+    * (amount = purchase sum, last click by record ord) and the
+    * terminal-status state machine: FAILED (fatal incident, payload
+    * k >= 90 — VariableParser.parseTransferCreateFailed:185-187) wins
+    * over COMPLETED (instance ended) wins over the IN_PROGRESS default
+    * (Transfer ctor). RecordParser + VariableParser +
+    * InflightTransferManager composing one Transfer row per instance,
+    * minus the repo lookups: the fold is total, not read-modify-write.
     * The last-write ordering is the (ts, event_id) PAIR compared
-    * lexicographically — same semantics as the batch side's struct
-    * max_by, with no composite-bigint overflow at event_id >= 1e6.
+    * lexicographically — no composite-bigint overflow at
+    * event_id >= 1e6.
     */
   case class St(started: Long, completed: Long, amountE2: Long,
     lastTs: Long, lastId: Long, lastClickE2: Long, hasClick: Boolean,
@@ -57,15 +72,15 @@ object StreamImport {
   private def isAfter(ts: Long, id: Long, lastTs: Long, lastId: Long): Boolean =
     ts > lastTs || (ts == lastTs && id > lastId)
 
-  /** The materialized entity row — column-compatible with
-    * ImporterCore.transfers so the SAME DuckDB oracle checks the
-    * streaming path.
+  /** The materialized Transfer entity (the reference's
+    * entity/transfer/Transfer.java row, the columns this corpus can
+    * populate) — the row of the stream and of ImporterCore.transfers.
     */
   case class TransferRow(transfer_key: Long, tenant: String,
     started_ms: Long, completed_ms: Long, amount: String,
     last_click_value: String, status: String, n_events: Long)
 
-  /** Double → cents with the SAME rounding as the batch path's
+  /** Double → cents with the SAME rounding as the oracle's
     * decimal(18,2) cast (HALF_UP on the decimal rendering of the
     * double — `math.round(v * 100)` would differ on negatives and on
     * FP .5 boundaries, diverging from the shared oracle).
@@ -181,22 +196,6 @@ object StreamImport {
     */
   private[graft] val PreFoldFlushEntries = 1 << 15
 
-  /** Whether the entity folds run the map-side pre-fold (the
-    * production default — it is the hot-key skew bound at scale).
-    * `SPARK_GRAFT_PREFOLD=off` selects the raw-record path instead:
-    * records shuffle raw and fold inside the stateful operator — no
-    * per-partition hash map, no per-partial accumulator
-    * serialization. That trade wins only when batches are tiny AND no
-    * key is hot (the r8 A/B measured the pre-fold's fixed cost at the
-    * toy gate batch sizes — see PLANS.md "Pre-fold attribution");
-    * at 100 TB the pre-fold is what keeps a hot key from funneling
-    * all its raw records through one stateful task, so the env switch
-    * exists for measurement and small deployments, not as a tuning
-    * default.
-    */
-  private[graft] val PreFoldDefault: Boolean =
-    sys.env.get("SPARK_GRAFT_PREFOLD").forall(!_.equalsIgnoreCase("off"))
-
   /** Per-partition pre-fold: group-fold a partition's records into
     * [[PreFold]] partials with the bounded hash map described above.
     */
@@ -252,45 +251,6 @@ object StreamImport {
       (s, p) => spec.merge(s, p.st))
     state.update(st)
     spec.render(key, st).iterator
-  }
-
-  /** Raw-record variant of [[unboundedUpdate]] — the pre-pre-fold
-    * (round-6) data path kept selectable for the bench A/B and for
-    * deployments whose batches are tiny with no hot keys (see
-    * [[PreFoldDefault]]): records shuffle raw and fold inside the
-    * stateful operator.
-    */
-  private def unboundedUpdateRaw[S, O](spec: EntityFold[S, O])(
-      key: Long, recs: Iterator[Rec], state: GroupState[S]): Iterator[O] = {
-    val st = recs.foldLeft(state.getOption.getOrElse(spec.empty))(spec.step)
-    state.update(st)
-    spec.render(key, st).iterator
-  }
-
-  /** Raw-record variant of [[boundedUpdate]] (same eviction contract;
-    * the late cut is per-RECORD here rather than per-partial).
-    */
-  private def boundedUpdateRaw[S, O](spec: EntityFold[S, O], horizonMs: Long)(
-      key: Long, recs: Iterator[Rec], state: GroupState[IncSt[S]]): Iterator[SinkRow[O, S]] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val wm = state.getCurrentWatermarkMs()
-      val live = recs.filter(_.ts_ms >= wm).toArray
-      if (live.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption
-        val (incTs, incId) = prev.map(p => (p.inc_ts, p.inc_id))
-          .getOrElse(live.iterator.map(r => (r.ts_ms, r.event_id)).min)
-        val st = live.foldLeft(prev.map(_.st).getOrElse(spec.empty))(spec.step)
-        state.update(IncSt(incTs, incId, st))
-        val maxTs = live.iterator.map(_.ts_ms).max
-        state.setTimeoutTimestamp(math.max(maxTs, wm) + horizonMs)
-        Iterator.single(SinkRow(key, spec.tenant(key),
-          spec.render(key, st), incTs, incId, st, None))
-      }
-    }
   }
 
   /** Bounded keyed fold with watermark-driven state EVICTION — the
@@ -359,59 +319,61 @@ object StreamImport {
     * The watermark column is assigned on the partial's `max_ts`: the
     * batch maximum over partials equals the maximum over raw records,
     * so watermark ADVANCEMENT is unchanged by the pre-fold.
-    *
-    * `preFold = false` selects the raw-record (round-6) path: records
-    * shuffle raw and fold inside the stateful operator — see
-    * [[PreFoldDefault]] for when that trade wins.
     */
   private[graft] def entityStream[S <: Product : TypeTag, O <: Product : TypeTag](
       events: DataFrame, spec: EntityFold[S, O], bounded: Boolean,
       watermark: String, horizonMs: Long,
-      opMode: OutputMode = OutputMode.Update,
-      preFold: Boolean = PreFoldDefault): DataFrame = {
+      opMode: OutputMode = OutputMode.Update): DataFrame = {
     import events.sparkSession.implicits._
     if (bounded) {
+      implicit val preEnc: Encoder[PreFold[S]] = Encoders.product[PreFold[S]]
       implicit val incEnc: Encoder[IncSt[S]] = Encoders.product[IncSt[S]]
       implicit val outEnc: Encoder[SinkRow[O, S]] = Encoders.product[SinkRow[O, S]]
-      if (preFold) {
-        implicit val preEnc: Encoder[PreFold[S]] = Encoders.product[PreFold[S]]
-        toRecs(events).mapPartitions(this.preFold(spec))
-          .withColumn("event_time", timestamp_millis(col("max_ts")))
-          .withWatermark("event_time", watermark)
-          .as[PreFold[S]]
-          .groupByKey(_.entity_key)
-          .flatMapGroupsWithState(opMode, GroupStateTimeout.EventTimeTimeout)(
-            boundedUpdate(spec, horizonMs))
-          .toDF()
-      } else {
-        toRecs(events)
-          .withColumn("event_time", timestamp_millis(col("ts_ms")))
-          .withWatermark("event_time", watermark)
-          .as[Rec]
-          .groupByKey(_.user_id)
-          .flatMapGroupsWithState(opMode, GroupStateTimeout.EventTimeTimeout)(
-            boundedUpdateRaw(spec, horizonMs))
-          .toDF()
-      }
+      partials(events, spec)
+        .withColumn("event_time", timestamp_millis(col("max_ts")))
+        .withWatermark("event_time", watermark)
+        .as[PreFold[S]]
+        .groupByKey(_.entity_key)
+        .flatMapGroupsWithState(opMode, GroupStateTimeout.EventTimeTimeout)(
+          boundedUpdate(spec, horizonMs))
+        .toDF()
     } else {
       implicit val sEnc: Encoder[S] = Encoders.product[S]
       implicit val oEnc: Encoder[O] = Encoders.product[O]
-      if (preFold) {
-        implicit val preEnc: Encoder[PreFold[S]] = Encoders.product[PreFold[S]]
-        toRecs(events).mapPartitions(this.preFold(spec))
-          .groupByKey(_.entity_key)
-          .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-            unboundedUpdate(spec))
-          .toDF()
-      } else {
-        toRecs(events)
-          .groupByKey(_.user_id)
-          .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-            unboundedUpdateRaw(spec))
-          .toDF()
-      }
+      partials(events, spec)
+        .groupByKey(_.entity_key)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
+          unboundedUpdate(spec))
+        .toDF()
     }
   }
+
+  /** The map-side [[preFold]] partials of an events frame (batch or
+    * streaming) — what every keyed fold, stateful or not, shuffles.
+    */
+  private[graft] def partials[S <: Product : TypeTag](
+      events: DataFrame, spec: EntityFold[S, _]): Dataset[PreFold[S]] =
+    toRecs(events).mapPartitions(preFold(spec))(Encoders.product[PreFold[S]])
+
+  /** Stateless merge of partials: one shuffle on the entity key, the
+    * fold's own `merge` per key, then `render`. Partials from any
+    * split of the records — input partitions, time slices, import
+    * runs — merge to the fold of all of them (FoldMonoidSpec).
+    */
+  private[graft] def mergePartials[S <: Product : TypeTag, O <: Product : TypeTag](
+      parts: Dataset[PreFold[S]], spec: EntityFold[S, O]): Dataset[O] =
+    parts.groupByKey(_.entity_key)(Encoders.scalaLong)
+      .flatMapGroups((k, ps) =>
+        spec.render(k, ps.foldLeft(spec.empty)((s, p) => spec.merge(s, p.st))))(
+        Encoders.product[O])
+
+  /** An entity built from a batch events frame with the SAME fold the
+    * stream runs — [[entityStream]]'s pre-fold plus a merge with no
+    * state store — so batch builds and the stream share one rule set.
+    */
+  def entityBatch[S <: Product : TypeTag, O <: Product : TypeTag](
+      events: DataFrame, spec: EntityFold[S, O]): Dataset[O] =
+    mergePartials(partials(events, spec), spec)
 
   /** The sink-side read-modify-write for bounded folds — the merge
     * step of TenantUpsertSink.upsert. For each arriving [[SinkRow]]:
@@ -571,13 +533,25 @@ object StreamImport {
 
   // ------------------------------------------------ TransactionRequest
 
-  /** TransactionRequest streaming state: LAST-WRITE-WINS on the state
-    * signal (every state-carrying record overwrites; latest ord wins —
-    * ImporterCore.impEntityTxnreq's arg-max, folded incrementally),
-    * plus the scalar registry columns (VariableParser.java:71-83):
-    * authType / payerDfspId / payeeDfspId, and initiatorType+scenario
-    * from `mpesaChannelRequest` (:83, one record writes both), each
-    * writer group with its own last-write mark.
+  /** TransactionRequest state. Unlike Transfer's monotone flags,
+    * `transactionState` is LAST-WRITE-WINS — every parser call
+    * overwrites it (VariableParser.parsePartyLookUpState:124-133,
+    * parseTransactionFailed:113-122, parseSettlementFiled:102-111,
+    * parseTransactionRequestFailed:247-250), so the latest
+    * state-carrying record's signal wins ([[txnSignal]]: all five
+    * TransactionRequestState values are reachable).
+    *
+    * Scalar registry columns (VariableParser.java:71-83), each writer
+    * group with its own last-write mark: `authType` (:71;
+    * parseTransactionRequest:268-269 defaults to NONE) rides signup;
+    * `partyLookupFspId` → payer_dfsp_id (:73) rides view;
+    * `initiatorFspId` → payee_dfsp_id (:74) is DIRECTION-GUARDED
+    * (parseInitiatorFspId:285-289 writes only for OUTGOING requests,
+    * odd user_id in the parity stand-in) and rides click;
+    * `mpesaChannelRequest` (:83 → parseTransactionMpesaRequest:236-240)
+    * overwrites initiatorType AND scenario in one write, carried by
+    * non-fatal error records (fatal ones are the request-failed
+    * signal).
     */
   case class TxnSt(state: String, stateTs: Long, stateId: Long, started: Long,
     completed: Long, amountE2: Long, hasAmount: Boolean,
@@ -601,6 +575,13 @@ object StreamImport {
     initiator_type: String, scenario: String,
     n_events: Long)
 
+  /** The state signal a record carries: signup → RECEIVED, view →
+    * party lookup, click → transaction progress (k ∈ [80,90) is
+    * parseTransactionRequestResponse's reject arm), purchase →
+    * settlement, error → request-failed only when fatal (non-fatal
+    * errors carry none, like parseTransactionRequestFailed's
+    * "true"-only write).
+    */
   private def txnSignal(r: Rec): Option[String] = {
     val fatal = r.k >= 90
     r.event_type match {
@@ -729,10 +710,15 @@ object StreamImport {
 
   // ------------------------------------------------------------ Batch
 
-  /** Batch entity streaming state: counters + lifecycle
-    * (InflightBatchManager semantics — all order-insensitive) plus
-    * the registry's metadata strings (batchParsers:88-91: requestFile
-    * from `fileName`, note) with their own last-write marks.
+  /** Batch entity state (InflightBatchManager + batchParsers:88-91):
+    * startedAt set once, completedAt from the end record, the progress
+    * counters the operations UI reads — sub-transactions are the
+    * click/view/purchase records, failed counts fatal errors,
+    * completed counts purchases, ongoing is the remainder — plus the
+    * registry's metadata strings with their own last-write marks:
+    * requestFile from `fileName` (:89, rides signup, the batch
+    * registration record) and note (:91, rides view); batchId (:88)
+    * and requestId (:90) derive from the key.
     */
   case class BatchSt(started: Long, completed: Long, total: Long,
     done: Long, failed: Long,
@@ -819,11 +805,43 @@ object StreamImport {
 
   // ------------------------------------------------------------- Wide
 
-  /** Streaming wide-entity state: since the plain-scalar registry
-    * (VariableParser.java:44,55-69) gives almost every entity column a
-    * SECOND writer on top of its nested-class writer, each column (or
-    * group of columns always written together) carries its OWN
-    * last-write mark:
+  /** Wide Transfer state: the registry's nested-JSON classes, PREPARE,
+    * the raw-string dual parser and the plain scalars
+    * (VariableParser.java:41-69). Each record synthesizes its
+    * variable's JSON document and parses it back (multi-level paths,
+    * decimal amounts/fees, parsed timestamps, direction routing), as
+    * the reference's JsonPath extraction does. Record routing, by
+    * event type and payload k (missing k reads 0):
+    *
+    *   - signup k < 50: `channelRequest` (:50 → parseChannelRequest:
+    *     200-211) — party ids/types, amount, currency;
+    *   - signup k ∈ [50,90): `quoteSwitchRequest` (:42 →
+    *     parseQuoteSwitchRequest:139-153) — the SAME party/amount
+    *     columns plus transactionId and the party fspIds;
+    *   - purchase k < 90: `transferResponse-CREATE` (:46 →
+    *     parseTransferResponse:174-183) — completedTimestamp
+    *     (`yyyy-MM-dd'T'HH:mm:ss`) and transferState;
+    *   - click k < 90: `transferResponse-PREPARE` (:45 →
+    *     parseTransferResponsePrepare:189-198) — the same completedAt;
+    *   - view k < 50: `localQuoteResponse` (:41 →
+    *     parseTransferLocalQuoteResponse:155-166) — fee, currency and
+    *     quote code to the payee_* columns for INCOMING transfers, to
+    *     payer_* otherwise (direction: user_id parity, the stand-in
+    *     for the per-process application.yml config);
+    *   - view k ∈ [50,90): `payeeQuoteResponse` (:43 →
+    *     parsePayeeQuoteResponse:168-172) — payee fee/currency,
+    *     UN-routed;
+    *   - error: `errorInformation` (:51-52), a DUAL parser — the raw
+    *     string (parseErrorInformation:213-215) and
+    *     parseTransferCreateFailed:185-187 ("false" → COMPLETED, else
+    *     FAILED);
+    *   - k >= 90 of signup/purchase/click/view: the thirteen PLAIN
+    *     set-call scalars (:44, 55-69), sub-routed by event_id mod the
+    *     class's scalar count, each writing a column a nested class
+    *     also writes.
+    *
+    * So almost every column has two writers, and each column (or group
+    * always written together) carries its OWN last-write mark:
     *
     *   - party core (party ids + amount): channelRequest AND
     *     quoteSwitchRequest only — one shared mark;
@@ -831,8 +849,8 @@ object StreamImport {
     *     sourceAccountType / targetAccountType / currency scalars;
     *   - transactionId / dfsp ids: quoteSwitchRequest OR the
     *     transactionId / sourceInstitution / targetInstitution scalars;
-    *   - completedMs: CREATE and PREPARE share a mark (:174-183,
-    *     :189-198) while transferState is CREATE-only;
+    *   - completedMs: CREATE and PREPARE share a mark while
+    *     transferState is CREATE-only;
     *   - payer fee/currency/quoteCode: outgoing-routed
     *     localQuoteResponse OR sourceFee/sourceCurrency/sourceQuoteCode;
     *   - payee fee/currency: incoming-routed localQuoteResponse, the
@@ -872,7 +890,7 @@ object StreamImport {
   private def markOf(r: Rec): LastMark = LastMark(r.ts_ms, r.event_id)
 
   /** tenant is carried for the sink's partition routing and dropped
-    * from the oracle-checked projection (the batch entity has none).
+    * from the oracle-checked projection (the wide entity has none).
     */
   case class WideRow(transfer_key: Long, tenant: String,
     payer_party_id: String, payer_id_type: String,
@@ -895,12 +913,6 @@ object StreamImport {
     java.math.BigDecimal.valueOf(v)
       .setScale(2, java.math.RoundingMode.HALF_UP).toPlainString
 
-  /** Per-record nested-payload round-trip: SYNTHESIZE the variable's
-    * JSON document, then parse it back and extract multi-level paths
-    * (JSON Pointer) — the streaming mirror of the batch side's
-    * to_json/from_json, so the stream path also exercises real JSON
-    * parsing per record, like the reference's VariableParser.
-    */
   /** Parse a synthesized `transferResponse-*` document and return the
     * epoch-millis of its completedTimestamp (both CREATE and PREPARE
     * carry one — VariableParser:174-183 / :189-198).

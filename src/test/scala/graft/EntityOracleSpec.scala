@@ -1,0 +1,60 @@
+package graft
+
+import graft.operators.ImporterCore
+
+import java.sql.{Connection, DriverManager}
+
+/** The importer entity builds against their DuckDB oracles, in-suite.
+  * The builds run the streaming folds (`StreamImport.entityBatch`),
+  * so the stream-vs-batch specs compare two runs of one definition;
+  * the hand-written `*Sql` oracles are the independent reference.
+  * Comparison as in tools/check.py: columns sorted by name, every
+  * value stringified, rows sorted.
+  */
+class EntityOracleSpec extends SparkSpec {
+
+  private val entities = Seq("imp_entity_transfers", "imp_entity_wide",
+    "imp_entity_txnreq", "imp_entity_batches", "imp_entity_incremental")
+
+  private lazy val duck: Connection = {
+    Class.forName("org.duckdb.DuckDBDriver")
+    val c = DriverManager.getConnection("jdbc:duckdb:")
+    c.createStatement().execute(
+      s"CREATE VIEW events AS SELECT * FROM read_parquet('$sfDir/events.parquet')")
+    c
+  }
+
+  override def afterAll(): Unit = {
+    duck.close()
+    super.afterAll()
+  }
+
+  /** Columns by name, rows as sorted tab-joined strings. */
+  private def normalized(cols: Seq[String], rows: Seq[Seq[String]]): (Seq[String], Seq[String]) = {
+    val order = cols.indices.sortBy(cols)
+    (order.map(cols), rows.map(r => order.map(r).mkString("\t")).sorted)
+  }
+
+  private def oracleRows(sql: String): (Seq[String], Seq[String]) = {
+    val rs = duck.createStatement().executeQuery(sql)
+    val md = rs.getMetaData
+    val cols = (1 to md.getColumnCount).map(md.getColumnLabel)
+    val rows = Iterator.continually(rs).takeWhile(_.next())
+      .map(r => cols.indices.map(i => String.valueOf(r.getString(i + 1)))).toVector
+    normalized(cols, rows)
+  }
+
+  entities.foreach { name =>
+    test(s"$name matches its DuckDB oracle") {
+      val df = ImporterCore.queries(name)(spark, sfDir)
+      val (sCols, sRows) = normalized(df.columns.toSeq,
+        df.collect().toSeq.map(_.toSeq.map(String.valueOf)))
+      val (dCols, dRows) = oracleRows(ImporterCore.oracles(name))
+      assert(sCols == dCols, "column names differ")
+      assert(sRows.nonEmpty, "empty result")
+      assert(sRows.length == dRows.length, "row counts differ")
+      val diff = sRows.zip(dRows).filter { case (a, b) => a != b }
+      assert(diff.length == 0, s"differing rows; first (spark, duckdb): ${diff.headOption}")
+    }
+  }
+}

@@ -163,13 +163,13 @@ class ImporterCoreSpec extends SparkSpec {
     // aggregate in the state
     import org.apache.spark.sql.functions.{col => c, hash, lit, pmod}
     val ev = Tables.events(spark, sfDir)
+    val fold = streaming.StreamImport.transferFold
     val slices = (0 until 3).map(i =>
       // pmod, not abs-% — abs(Int.MinValue) is negative and would
       // silently drop a row from every slice (Salting's convention)
-      ImporterCore.transferStateOf(ev.filter(pmod(hash(c("event_id")), lit(3)) === i)))
-    val merged = ImporterCore.renderTransferState(
-      ImporterCore.mergeTransferState(slices.reduce(_ unionByName _)))
-      .orderBy("transfer_key").collect()
+      streaming.StreamImport.partials(ev.filter(pmod(hash(c("event_id")), lit(3)) === i), fold))
+    val merged = streaming.StreamImport.mergePartials(slices.reduce(_ union _), fold)
+      .toDF().orderBy("transfer_key").collect()
     val full = ImporterCore.impEntityTransfers(spark, sfDir).collect()
     assert(merged.length == full.length)
     merged.zip(full).foreach { case (m, f) => assert(m.toSeq == f.toSeq) }

@@ -1975,58 +1975,4 @@ class StreamingSpec extends SparkSpec {
       }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
-
-  test("raw-record path (SPARK_GRAFT_PREFOLD=off) equals the pre-fold path and the batch entity") {
-    // the A/B switch selects a second data path (unboundedUpdateRaw /
-    // boundedUpdateRaw: records shuffle raw and fold inside the
-    // stateful operator) that the bench times but never
-    // correctness-checks — pin BOTH its arms against the batch entity
-    // so the measurement switch can never drift from the real path
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val batch = ImporterCore.impEntityTransfers(spark, sfDir).collect()
-    def run(bounded: Boolean, recs: Seq[Rec], chunks: Int): Array[org.apache.spark.sql.Row] = {
-      val stream = MemoryStream[Rec]
-      val sinkDir = java.nio.file.Files.createTempDirectory("graft_raw_").toString + "/t"
-      val merge =
-        if (bounded) Some(StreamImport.foldMerge(StreamImport.transferFold)) else None
-      val built =
-        if (bounded) StreamImport.entityStream(stream.toDF(), StreamImport.transferFold,
-          bounded = true, watermark = "0 seconds", horizonMs = 60000L, preFold = false)
-        else StreamImport.entityStream(stream.toDF(), StreamImport.transferFold,
-          bounded = false, watermark = "0 seconds", horizonMs = 0L, preFold = false)
-      val q = built
-        .writeStream.outputMode("update")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_rawchk_").toString)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          if (bounded) TenantUpsertSink.upsert(sinkDir, b, "entity_key", merge)
-          else TenantUpsertSink.upsert(sinkDir, b, "transfer_key")
-        }
-        .start()
-      recs.grouped(math.max(recs.length / chunks, 1)).foreach { c =>
-        stream.addData(c.toIndexedSeq); q.processAllAvailable()
-      }
-      q.stop()
-      val cur = TenantUpsertSink.readCurrent(spark, sinkDir).get
-      (if (bounded) cur.select(explode(col("rows")).as("r")).select("r.*") else cur)
-        .select("transfer_key", "tenant", "started_ms", "completed_ms",
-          "amount", "last_click_value", "status", "n_events")
-        .orderBy("transfer_key").collect()
-    }
-    val all = StreamImport.toRecs(Tables.events(spark, sfDir)).collect()
-    // unbounded raw: exact under ARBITRARY disorder (id order ≠ ts order)
-    val un = run(bounded = false, all.sortBy(_.event_id).toSeq, chunks = 3)
-    assert(un.length == batch.length && un.nonEmpty)
-    un.zip(batch).foreach { case (s, b) =>
-      assert(s.toSeq == b.toSeq, s"unbounded raw key ${s.get(0)}: ${s.toSeq} vs ${b.toSeq}")
-    }
-    // bounded raw, tiny horizon: per-RECORD late cut + eviction +
-    // incarnation merge — the raw twin of the tiny-horizon pre-fold spec
-    val bo = run(bounded = true, all.sortBy(r => (r.ts_ms, r.event_id)).toSeq, chunks = 6)
-    assert(bo.length == batch.length && bo.nonEmpty)
-    bo.zip(batch).foreach { case (s, b) =>
-      assert(s.toSeq == b.toSeq, s"bounded raw key ${s.get(0)}: ${s.toSeq} vs ${b.toSeq}")
-    }
-  }
 }
