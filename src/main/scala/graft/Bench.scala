@@ -141,19 +141,6 @@ object Bench {
     // (see the per-rep comment below); overridable so an A/B against
     // the production-sized 32 stays a one-env-var run
     val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8").toInt.max(1)
-    // state-store provider A/B (r12 verdict item 7): the 32-partition
-    // protocol point is dominated by per-trigger state-store commit
-    // fixed cost (PLANS.md "stream_join_outer trigger sizing": ~8.5 s
-    // per extra micro-batch), so the provider choice is re-evaluated
-    // THERE, not at toy state sizes.
-    // The GRAFT default (Graft.session) is RocksDB + changelog
-    // checkpointing — the 100 TB off-heap-state posture;
-    // SPARK_GRAFT_STREAM_STATESTORE=hdfs flips the stream family's
-    // child sessions to Spark's in-memory HDFSBackedStateStore for
-    // the A/B, =rocksdb pins the default explicitly.
-    val stateStore = sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").map(_.trim).filter(_.nonEmpty)
-    stateStore.foreach(s => require(s == "rocksdb" || s == "hdfs",
-      s"SPARK_GRAFT_STREAM_STATESTORE supports 'rocksdb'|'hdfs', got '$s'"))
     // family by MEMBERSHIP, not name prefix: src_out_of_order is a
     // stateful streaming query whose name doesn't start with stream_,
     // and a prefix test silently left it at the 32-partition default
@@ -233,17 +220,7 @@ object Bench {
       Thread.sleep(150)
       val session = spark.newSession()
       functions.GraftFunctions.register(session)
-      if (streamQ) {
-        session.conf.set("spark.sql.shuffle.partitions", streamParts)
-        stateStore.foreach {
-          case "hdfs" => session.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-          case _ => session.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        }
-      }
+      if (streamQ) session.conf.set("spark.sql.shuffle.partitions", streamParts)
       val gcT0 = gcTotalSec()
       val t0 = System.nanoTime()
       try {

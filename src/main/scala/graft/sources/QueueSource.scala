@@ -171,14 +171,12 @@ private class QueueMicroBatchStream(subject: String) extends MicroBatchStream {
 }
 
 private object QueueMicroBatchStream {
-  /** Per-partition row floor for the micro-batch split (env
-    * `SPARK_GRAFT_QUEUE_SPLIT_ROWS`): small enough that the gate
-    * corpora fan out across the local cores, large enough that a
-    * partition amortizes its task overhead. A production deployment
-    * sizes this to (batch rows / cluster scan slots).
+  /** Per-partition row floor for the micro-batch split: small enough
+    * that the gate corpora fan out across the local cores, large enough
+    * that a partition amortizes its task overhead. A production
+    * deployment sizes this to (batch rows / cluster scan slots).
     */
-  val MinRowsPerPartition: Long =
-    sys.env.getOrElse("SPARK_GRAFT_QUEUE_SPLIT_ROWS", "8192").toLong.max(1L)
+  val MinRowsPerPartition: Long = 8192L
 }
 
 private case class QueuePartition(subject: String, from: Long, until: Long)

@@ -8,7 +8,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * TempDocumentStore (NatsConsumer.java:56-70): records whose
   * bpmnProcessId is not yet known are buffered until a sibling record
   * delivers the workflowKey → bpmnProcessId association, then flushed
-  * with the association applied.
+  * with the association applied. This is the `src_out_of_order`
+  * operator: it routes whole records. The import loop does not run it
+  * — [[StreamImport.importLoop]] folds records before their signup
+  * into the entity and gates only the emission on the association, so
+  * [[MaxBuffer]] does not apply there; it shares this object's
+  * association rule ([[associates]]) and [[AssocHorizonMs]].
   *
   * Model on the events stream: the `signup` record carries the
   * instance's process association (process id derived from the
@@ -66,6 +71,9 @@ object OutOfOrder {
   /** Association payload a signup record carries. */
   def assocOf(userId: Long): String = s"proc-t${userId % 10}"
 
+  /** Whether a record delivers its instance's association. */
+  def associates(r: StreamImport.Rec): Boolean = r.event_type == "signup"
+
   def update(key: Long, recs: Iterator[StreamImport.Rec],
       state: GroupState[BufferSt]): Iterator[Routed] = {
     if (state.hasTimedOut) {
@@ -87,7 +95,7 @@ object OutOfOrder {
     var st = st0
     recs.foreach { r =>
       st = st.copy(maxTs = math.max(st.maxTs, r.ts_ms))
-      if (r.event_type == "signup" && st.assoc.isEmpty) {
+      if (associates(r) && st.assoc.isEmpty) {
         val a = assocOf(key)
         // association arrived: flush the buffer in arrival order, and
         // the association-carrying record itself routes too (the

@@ -37,6 +37,12 @@ import org.apache.spark.sql.types.LongType
   * reference's read-modify-write), so eviction never loses or
   * overwrites data. The state itself lives in RocksDB
   * ([[graft.Graft.session]]), off-heap.
+  *
+  * The composed import loop ([[importLoop]]) is that same bounded fold
+  * with the instance's association riding the accumulator: ONE
+  * stateful operator, so its watermark bounds all of the loop's state,
+  * and records that arrive before their association are folded, not
+  * buffered.
   */
 object StreamImport {
 
@@ -277,30 +283,95 @@ object StreamImport {
     *     EXTENDED, never overwritten by a partial restart.
     */
   private def boundedUpdate[S, O](spec: EntityFold[S, O], horizonMs: Long)(
-      key: Long, parts: Iterator[PreFold[S]], state: GroupState[IncSt[S]]): Iterator[SinkRow[O, S]] = {
+      key: Long, parts: Iterator[PreFold[S]], state: GroupState[IncSt[S]]): Iterator[SinkRow[O, S]] =
     if (state.hasTimedOut) {
       state.remove()
       Iterator.empty
-    } else {
-      val wm = state.getCurrentWatermarkMs()
-      // materialized eagerly: maxTs must be final BEFORE the timeout is
-      // armed, whatever the inner merge's strictness
-      val live = parts.filter(_.max_ts >= wm).toArray
-      if (live.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption
-        val (incTs, incId) = prev.map(p => (p.inc_ts, p.inc_id))
-          .getOrElse(live.iterator.map(p => (p.ord_ts, p.ord_id)).min)
-        val st = live.foldLeft(prev.map(_.st).getOrElse(spec.empty))(
-          (s, p) => spec.merge(s, p.st))
-        state.update(IncSt(incTs, incId, st))
-        val maxTs = live.iterator.map(_.max_ts).max
-        state.setTimeoutTimestamp(math.max(maxTs, wm) + horizonMs)
-        Iterator.single(SinkRow(key, spec.tenant(key),
-          spec.render(key, st), incTs, incId, st, None))
-      }
+    } else advance(spec, horizonMs, state.getOption, parts, state)(identity)
+      .map(inc => SinkRow(key, spec.tenant(key), spec.render(key, inc.st),
+        inc.inc_ts, inc.inc_id, inc.st, None)).iterator
+
+  /** One bounded-fold step for a key, shared by [[boundedUpdate]] and
+    * the import loop ([[loopUpdate]]): the late cut, the merge of the
+    * live partials into the `open` incarnation (a fresh one, birth-
+    * marked by its earliest record, when None), the state write
+    * (`put` wraps the incarnation in the caller's state shape) and the
+    * timeout re-armed `horizonMs` past the newest record. None, with
+    * the state untouched, when every partial was late.
+    */
+  private def advance[S, T](spec: EntityFold[S, _], horizonMs: Long,
+      open: Option[IncSt[S]], parts: Iterator[PreFold[S]], state: GroupState[T])(
+      put: IncSt[S] => T): Option[IncSt[S]] = {
+    val wm = state.getCurrentWatermarkMs()
+    // materialized eagerly: maxTs must be final BEFORE the timeout is
+    // armed, whatever the inner merge's strictness
+    val live = parts.filter(_.max_ts >= wm).toArray
+    if (live.isEmpty) None
+    else {
+      val (incTs, incId) = open.map(p => (p.inc_ts, p.inc_id))
+        .getOrElse(live.iterator.map(p => (p.ord_ts, p.ord_id)).min)
+      val inc = IncSt(incTs, incId, live.foldLeft(open.map(_.st).getOrElse(spec.empty))(
+        (s, p) => spec.merge(s, p.st)))
+      state.update(put(inc))
+      state.setTimeoutTimestamp(math.max(live.iterator.map(_.max_ts).max, wm) + horizonMs)
+      Some(inc)
     }
   }
+
+  /** The import loop's accumulator: the entity fold's own plus the
+    * association bit its instance's `signup` record sets
+    * ([[OutOfOrder.associates]]). OR is a monoid, so the bit rides the
+    * map-side pre-fold and the incarnation merge like any other field.
+    */
+  case class Assoc[S](assoc: Boolean, st: S)
+
+  private def associating[S, O](spec: EntityFold[S, O]): EntityFold[Assoc[S], O] =
+    EntityFold(Assoc(assoc = false, spec.empty),
+      (a, r) => Assoc(a.assoc || OutOfOrder.associates(r), spec.step(a.st, r)),
+      (a, b) => Assoc(a.assoc || b.assoc, spec.merge(a.st, b.st)),
+      (k, a) => spec.render(k, a.st), spec.tenant)
+
+  /** The import loop's keyed state: whether the instance is associated
+    * (sticky across incarnations) and its open incarnation — None once
+    * an associated incarnation is evicted, which leaves this
+    * constant-size marker behind.
+    */
+  case class LoopSt[S](assoc: Boolean, open: Option[IncSt[Assoc[S]]])
+
+  /** The import loop's ONE stateful operator: [[boundedUpdate]] gated
+    * on the association. Records are folded whether or not their
+    * instance's signup has arrived (every fold is a commutative monoid,
+    * so folding early equals folding after a buffer flush); the bit
+    * only decides whether the key may reach the sink:
+    *
+    *   - a key emits [[SinkRow]]s only once it is associated — the
+    *     batch its signup lands in emits everything folded before it;
+    *   - an orphan incarnation (signup never arrived) is removed at the
+    *     horizon without ever emitting — the reference's
+    *     TempDocumentStore leak never reaches an entity;
+    *   - an evicted associated incarnation leaves the marker for
+    *     [[OutOfOrder.AssocHorizonMs]]: a later burst with no signup
+    *     opens a fresh incarnation that still emits, and the sink's
+    *     [[foldMerge]] merges it into the sunk row.
+    */
+  private def loopUpdate[S, O](spec: EntityFold[Assoc[S], O], horizonMs: Long)(
+      key: Long, parts: Iterator[PreFold[Assoc[S]]],
+      state: GroupState[LoopSt[S]]): Iterator[SinkRow[O, S]] =
+    if (state.hasTimedOut) {
+      if (state.get.assoc && state.get.open.isDefined) {
+        state.update(LoopSt(assoc = true, None))
+        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + OutOfOrder.AssocHorizonMs)
+      } else state.remove()
+      Iterator.empty
+    } else {
+      val prev = state.getOption
+      val wasAssoc = prev.exists(_.assoc)
+      advance(spec, horizonMs, prev.flatMap(_.open), parts, state)(
+        inc => LoopSt(wasAssoc || inc.st.assoc, Some(inc)))
+        .filter(inc => wasAssoc || inc.st.assoc)
+        .map(inc => SinkRow(key, spec.tenant(key), spec.render(key, inc.st),
+          inc.inc_ts, inc.inc_id, inc.st.st, None)).iterator
+    }
 
   import scala.reflect.runtime.universe.TypeTag
   import org.apache.spark.sql.{Encoder, Encoders}
@@ -322,21 +393,13 @@ object StreamImport {
     */
   private[graft] def entityStream[S <: Product : TypeTag, O <: Product : TypeTag](
       events: DataFrame, spec: EntityFold[S, O], bounded: Boolean,
-      watermark: String, horizonMs: Long,
-      opMode: OutputMode = OutputMode.Update): DataFrame = {
+      watermark: String, horizonMs: Long): DataFrame = {
     import events.sparkSession.implicits._
     if (bounded) {
-      implicit val preEnc: Encoder[PreFold[S]] = Encoders.product[PreFold[S]]
       implicit val incEnc: Encoder[IncSt[S]] = Encoders.product[IncSt[S]]
       implicit val outEnc: Encoder[SinkRow[O, S]] = Encoders.product[SinkRow[O, S]]
-      partials(events, spec)
-        .withColumn("event_time", timestamp_millis(col("max_ts")))
-        .withWatermark("event_time", watermark)
-        .as[PreFold[S]]
-        .groupByKey(_.entity_key)
-        .flatMapGroupsWithState(opMode, GroupStateTimeout.EventTimeTimeout)(
-          boundedUpdate(spec, horizonMs))
-        .toDF()
+      boundedFold(partials(events, spec), watermark, OutputMode.Update)(
+        boundedUpdate(spec, horizonMs))
     } else {
       implicit val sEnc: Encoder[S] = Encoders.product[S]
       implicit val oEnc: Encoder[O] = Encoders.product[O]
@@ -347,6 +410,21 @@ object StreamImport {
         .toDF()
     }
   }
+
+  /** The bounded keyed operator over partials: the watermark on each
+    * partial's newest record, then `update` per entity key under an
+    * event-time timeout, emitting [[SinkRow]]s.
+    */
+  private def boundedFold[P <: Product : TypeTag, T : Encoder, U : Encoder](
+      parts: Dataset[PreFold[P]], watermark: String, mode: OutputMode)(
+      update: (Long, Iterator[PreFold[P]], GroupState[T]) => Iterator[U]): DataFrame =
+    parts
+      .withColumn("event_time", timestamp_millis(col("max_ts")))
+      .withWatermark("event_time", watermark)
+      .as[PreFold[P]](Encoders.product[PreFold[P]])
+      .groupByKey(_.entity_key)(Encoders.scalaLong)
+      .flatMapGroupsWithState(mode, GroupStateTimeout.EventTimeTimeout)(update)
+      .toDF()
 
   /** The map-side [[preFold]] partials of an events frame (batch or
     * streaming) — what every keyed fold, stateful or not, shuffles.
@@ -2079,10 +2157,9 @@ object StreamImport {
       val sinkDir = s"$work/sink"
       val metrics = new StateMetricsListener
       spark.streams.addListener(metrics)
-      // sink seconds accumulate separately (same split as the
-      // import_loop runner): addBatch = state-op execution ∪ the
-      // per-batch parquet upsert, and optimizing the right half needs
-      // the split in every stream row's log line
+      // sink seconds accumulate separately: addBatch = state-op
+      // execution ∪ the per-batch parquet upsert, and optimizing the
+      // right half needs the split in every stream row's log line
       val sinkSec = new java.util.concurrent.atomic.DoubleAdder
       val q = frame
         .writeStream
@@ -2128,41 +2205,28 @@ object StreamImport {
     runStreamToSink(spark, s"$label@$dir", transform(stream), key, mode, merge)
   }
 
-  /** Default watermark delay of [[importLoop]]'s entity fold: must
-    * absorb the out-of-order buffer's worst-case association latency
-    * ([[OutOfOrder.OrphanHorizonMs]] + the routing watermark's own
-    * disorder allowance) on top of the stream's disorder — a record
-    * the buffer held back reaches the fold that much later than its
-    * event time.
+  /** Default watermark delay of [[importLoop]]'s fold: the disorder the
+    * loop tolerates. A record more than this behind the newest event
+    * time the stream has seen is late and dropped, and an idle key is
+    * evicted this long plus the horizon after its newest record.
     */
   val ComposedWatermark = "2 hours"
 
-  /** The reference's FULL import loop composed as ONE streaming query
-    * (NatsConsumer.listen → TempDocumentStore buffering →
-    * RecordParser → InflightTransferManager → JPA save,
+  /** The reference's FULL import loop as ONE streaming query with ONE
+    * stateful operator (NatsConsumer.listen → TempDocumentStore
+    * buffering → RecordParser → InflightTransferManager → JPA save,
     * NatsConsumer.java:39-106): raw JSON strings (the graft-queue
     * subject or any value-string stream) → one `from_json` parse →
-    * out-of-order association buffering (append-mode keyed state,
-    * [[OutOfOrder.routed]]) → map-side pre-fold → BOUNDED entity fold
-    * → [[SinkRow]]s for the incarnation-merging sink. Dead-lettered
-    * records (association never arrived) are filtered out, as the
-    * reference's TempDocumentStore leak would never reach an entity.
+    * map-side pre-fold → the bounded entity fold gated on the
+    * instance's association ([[loopUpdate]]) → [[SinkRow]]s for the
+    * incarnation-merging sink.
     *
-    * Both stateful operators run in APPEND mode — Spark only chains
-    * multiple flatMapGroupsWithState operators when all are Append and
-    * the query is Append — which leaves the bounded fold's execution
-    * unchanged (the mode gates only the planner's checks) and its
-    * emissions remain per-key cumulative SinkRows for the MERGING
-    * upsert sink, which absorbs re-emission by key. The fold's late
-    * cut stays exact through the buffer because a flushed record rides
-    * the SAME partial as the (fresh) association record that released
-    * it, and a partial with any non-late record folds whole; the
-    * widened [[ComposedWatermark]] covers the rest. Spark's global
-    * cross-stateful-operator late-row check must be disabled for this
-    * composition (`spark.sql.streaming.statefulOperator.
-    * checkCorrectness.enabled=false`) — the partial-granularity late
-    * rule plus the widened delay is the correctness argument the
-    * generic checker cannot see.
+    * The reference holds records back until their association arrives
+    * and then folds them; here they fold on arrival and the
+    * association only gates emission, so no record is buffered raw and
+    * the fold's watermark bounds the loop's whole state. The operator
+    * runs in Append mode, so the query runs with `outputMode("append")`;
+    * its per-key cumulative SinkRows are absorbed by the merging sink.
     */
   def importLoop(raw: DataFrame, watermark: String = ComposedWatermark,
       horizonMs: Long = EvictHorizonMs): DataFrame =
@@ -2176,27 +2240,14 @@ object StreamImport {
       raw: DataFrame, spec: EntityFold[S, O],
       watermark: String = ComposedWatermark,
       horizonMs: Long = EvictHorizonMs): DataFrame = {
-    // fail at composition time with the reason, not at the planner's
-    // generic late-row error: callers must scope the override to a
-    // CHILD session (spark.newSession + conf.set) so the global
-    // cross-stateful-operator safety check stays on for every other
-    // query — see [[runImportLoopToCompletion]] for the pattern
-    require(raw.sparkSession.conf.get(
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true") == "false",
-      "importLoop chains two stateful operators whose exactness rests on the " +
-        "partial-granularity late rule + widened fold watermark (see scaladoc) — " +
-        "Spark's generic checker cannot see that argument, so set " +
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false " +
-        "in a CHILD session (spark.newSession) before composing this query")
-    val recSchema = Encoders.product[Rec].schema
     val events = raw
-      .select(from_json(col("value"), recSchema).as("r"))
+      .select(from_json(col("value"), Encoders.product[Rec].schema).as("r"))
       .select("r.*")
-    val routedRecs = OutOfOrder.routed(events)
-      .filter(col("process_id") =!= OutOfOrder.DeadLetter)
-      .drop("process_id")
-    entityStream(routedRecs.toDF(), spec, bounded = true,
-      watermark, horizonMs, opMode = OutputMode.Append)
+    implicit val stEnc: Encoder[LoopSt[S]] = Encoders.product[LoopSt[S]]
+    implicit val outEnc: Encoder[SinkRow[O, S]] = Encoders.product[SinkRow[O, S]]
+    val gated = associating(spec)
+    boundedFold(partials(events, gated), watermark, OutputMode.Append)(
+      loopUpdate(gated, horizonMs))
   }
 
   /** Driver-checked transfers run — oracle-identical to the batch
@@ -2208,11 +2259,21 @@ object StreamImport {
         "amount", "last_click_value", "status", "n_events")
       .orderBy("transfer_key")
 
+  /** Publish `msgs` onto a graft-queue subject in BOUNDED chunks:
+    * toLocalIterator holds one partition's rows on the driver at a time
+    * (order preserved — a range-partitioned orderBy is the iteration
+    * order), so the driver footprint is one partition, not the corpus.
+    */
+  private def publishChunked(subject: String, msgs: Dataset[String]): Unit = {
+    import scala.jdk.CollectionConverters._
+    msgs.toLocalIterator().asScala.grouped(65536)
+      .foreach(chunk => graft.sources.QueueHub.publish(subject, chunk))
+  }
+
   /** Gate entry for the SOURCE surface itself (`src_queue` — promoted
     * from spec-only in round 15, r14 verdict item 8): the corpus's raw
     * export JSON published onto a graft-queue subject in bounded
-    * chunks (one driver-held partition at a time, the import_loop
-    * harness shape), streamed back through the DSv2 micro-batch
+    * chunks, streamed back through the DSv2 micro-batch
     * source, and parsed by the SAME [[graft.sources.RawIngest.parse]]
     * projection the batch path uses — answering the batch
     * imp_raw_ingest oracle, so subject offsets, micro-batching, and
@@ -2222,12 +2283,8 @@ object StreamImport {
     */
   def runSrcQueueToCompletion(spark: SparkSession, dir: String): DataFrame = {
     val subject = s"zeebe-export-src-${System.nanoTime()}"
-    val msgIt = graft.sources.RawIngest.rawRecords(spark, dir)
-      .as[String](Encoders.STRING)
-      .toLocalIterator()
-    import scala.jdk.CollectionConverters._
-    msgIt.asScala.grouped(65536)
-      .foreach(chunk => graft.sources.QueueHub.publish(subject, chunk))
+    publishChunked(subject,
+      graft.sources.RawIngest.rawRecords(spark, dir).as[String](Encoders.STRING))
     val work = java.nio.file.Files.createTempDirectory("graft_srcq_").toString
     val result = try {
       val stream = spark.readStream.format("graft-queue")
@@ -2251,99 +2308,28 @@ object StreamImport {
     * end-to-end (NatsConsumer.listen:39-106): the corpus's events
     * rendered as raw JSON strings onto a graft-queue subject (the
     * shape the NATS listener receives), then ONE [[importLoop]] query
-    * — DSv2 queue source → from_json → out-of-order association
-    * buffer → map-side pre-fold → bounded transfer fold →
-    * incarnation-merging sink — and the sink read back. Answers the
-    * SAME oracle as the batch imp_entity_transfers: every user in the
-    * corpus carries a signup association (verified at every sf), the
-    * per-user pre-signup backlog (max 40 records) is far under the
-    * orphan buffer cap, and the whole backlog lands in the first
-    * micro-batch so nothing is watermark-late.
-    *
-    * The required cross-stateful-operator conf override is scoped to a
-    * CHILD session here — the caller's session keeps Spark's safety
-    * check on.
+    * — DSv2 queue source → from_json → map-side pre-fold →
+    * association-gated bounded transfer fold → incarnation-merging
+    * sink — and the sink read back. Answers the SAME oracle as the
+    * batch imp_entity_transfers: every user in the corpus carries a
+    * signup association (verified at every sf), and the whole backlog
+    * lands in the first micro-batch so nothing is watermark-late.
     */
-  def runImportLoopToCompletion(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = spark0.newSession()
-    spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    // newSession starts from the SparkConf defaults, NOT the caller's
-    // runtime confs — carry the caller's partitioning choice across so
-    // a bench/production harness that sized shuffle+state partitioning
-    // for its corpus keeps that sizing inside the composed loop
-    spark.conf.set("spark.sql.shuffle.partitions",
-      spark0.conf.get("spark.sql.shuffle.partitions"))
+  def runImportLoopToCompletion(spark: SparkSession, dir: String): DataFrame = {
     val subject = s"zeebe-export-gate-${System.nanoTime()}"
-    // publish the gate corpus in BOUNDED chunks: toLocalIterator holds
-    // one partition's rows on the driver at a time (order preserved —
-    // the orderBy's range partitioning is the iteration order), so the
-    // harness's driver footprint is one partition, not the corpus. The
-    // whole-corpus .collect() that preceded this was the harness's
-    // first OOM at a larger gate corpus.
-    // phase stamps (r18 addendum): same-JVM sf10 reps flapped 1.5–3×
-    // on a RANDOM rep with identical batch counts, state maxima, GC
-    // and environment — the remaining split is WHICH phase of this
-    // drain loop carries a spike, so each run reports publish (sort +
-    // driver-side JSON feed) / stream (micro-batch drain) / readback
-    // (sink fold materialization) seconds on stderr
-    val tPub0 = System.nanoTime()
-    val msgIt = toRecs(Tables.events(spark, dir))
+    publishChunked(subject, toRecs(Tables.events(spark, dir))
       .orderBy("ts_ms", "event_id")
       .select(to_json(struct(col("event_id"), col("ts_ms"), col("user_id"),
         col("event_type"), col("value"), col("k"))))
-      .as[String](Encoders.STRING)
-      .toLocalIterator()
-    import scala.jdk.CollectionConverters._
-    msgIt.asScala.grouped(65536)
-      .foreach(chunk => graft.sources.QueueHub.publish(subject, chunk))
-    val tPub = (System.nanoTime() - tPub0) / 1e9
-    val work = java.nio.file.Files.createTempDirectory("graft_loop_gate_").toString
-    val result = try {
-      val sinkDir = s"$work/sink"
-      val merge = foldMerge(transferFold)
-      val metrics = new StateMetricsListener
-      spark.streams.addListener(metrics)
-      val stream = spark.readStream.format("graft-queue")
-        .option("subject", subject).load()
-      val tStr0 = System.nanoTime()
-      // sink seconds accumulate separately: the drain phase is (state
-      // ops + shuffle) ∪ (per-batch parquet upsert), and an
-      // intermittent drain-phase spike needs the split to be
-      // attributable (DoubleAdder: foreachBatch runs on the stream
-      // execution thread, read after awaitTermination)
-      val sinkSec = new java.util.concurrent.atomic.DoubleAdder
-      val q = importLoop(stream)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$work/chk")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val s0 = System.nanoTime()
-          TenantUpsertSink.upsert(sinkDir, b, "entity_key", Some(merge))
-          sinkSec.add((System.nanoTime() - s0) / 1e9)
-        }
-        .start()
-      try { q.processAllAvailable(); q.stop(); q.awaitTermination() }
-      finally {
-        spark.streams.removeListener(metrics)
-        graft.sources.QueueHub.clear(subject)
-      }
-      val tStr = (System.nanoTime() - tStr0) / 1e9
-      metrics.log(q, s"import_loop@$dir")
-      val tRd0 = System.nanoTime()
-      val folded = graft.Scratch.cp(TenantUpsertSink.readCurrent(spark, sinkDir)
-        .getOrElse(throw new IllegalStateException(s"no data reached the sink at $sinkDir")))
-      System.err.println(f"[graft-loop] import_loop@$dir phases: " +
-        f"publish=$tPub%.1fs stream=$tStr%.1fs " +
-        f"(sink=${sinkSec.sum}%.1fs of stream) " +
-        f"readback=${(System.nanoTime() - tRd0) / 1e9}%.1fs " +
-        "(presentation explode/orderBy runs at the caller's action)")
-      folded
-    } finally rmTree(new java.io.File(work))
-    result
+      .as[String](Encoders.STRING))
+    val stream = spark.readStream.format("graft-queue").option("subject", subject).load()
+    try runStreamToSink(spark, s"import_loop@$dir", importLoop(stream), "entity_key",
+        mode = "append", merge = Some(foldMerge(transferFold)))
       .select(explode(col("rows")).as("r")).select("r.*")
       .select("transfer_key", "tenant", "started_ms", "completed_ms",
         "amount", "last_click_value", "status", "n_events")
       .orderBy("transfer_key")
+    finally graft.sources.QueueHub.clear(subject)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

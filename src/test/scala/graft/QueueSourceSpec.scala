@@ -131,24 +131,14 @@ class QueueSourceSpec extends SparkSpec {
     assert(e.getMessage.toLowerCase.contains("subject"))
   }
 
-  test("importLoop: the FULL reference loop in ONE query — subject → out-of-order buffer → bounded fold → merging sink") {
+  test("importLoop: the FULL reference loop in ONE query — subject → association-gated bounded fold → merging sink") {
     // NatsConsumer.java:39-106 runs listen → TempDocumentStore →
     // RecordParser → Inflight*Manager → JPA as one consumer; here the
-    // same composition is ONE streaming query with TWO chained stateful
-    // operators: association buffering then the bounded entity fold.
+    // same composition is ONE streaming query with ONE stateful
+    // operator: the bounded entity fold, gated on the association.
     import spark.implicits._
     val subject = "zeebe-export-loop"
     QueueHub.clear(subject)
-    // the composed query chains stateful operators; Spark's generic
-    // cross-operator late-row check cannot see the partial-granularity
-    // late rule + widened fold watermark that make this composition
-    // exact (importLoop's doc carries the argument). The override is
-    // scoped to a CHILD session — the shared test session keeps the
-    // safety check on for every other query (importLoop itself asserts
-    // the conf, so a caller missing this fails with the reason)
-    val loopSession = spark.newSession()
-    loopSession.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     locally {
       val t0 = 1704067200000L
       def r(id: Long, tsMs: Long, user: Long, typ: String,
@@ -158,9 +148,9 @@ class QueueSourceSpec extends SparkSpec {
         s"""{"event_id":${x.event_id},"ts_ms":${x.ts_ms},"user_id":${x.user_id},""" +
           s""""event_type":"${x.event_type}","value":${x.value},"k":${x.k}}"""
       // u1: association first — records route as they arrive.
-      // u2: activity BEFORE its signup — must buffer, then flush and
-      //     fold once the association lands (the out-of-order case the
-      //     reference built TempDocumentStore for).
+      // u2: activity BEFORE its signup — must be held back from the
+      //     sink, then land whole once the association does (the
+      //     out-of-order case the reference built TempDocumentStore for).
       // u3: association never arrives — must never reach an entity.
       val u1 = Seq(r(1, t0, 1, "signup"), r(2, t0 + 1000, 1, "purchase", value = 5.0),
         r(3, t0 + 2000, 1, "click", value = 2.5))
@@ -171,7 +161,7 @@ class QueueSourceSpec extends SparkSpec {
       val u3 = Seq(r(20, t0 + 100, 3, "click", value = 1.0), r(21, t0 + 200, 3, "error", k = 95))
       val sinkDir = java.nio.file.Files.createTempDirectory("graft_loop_").toString + "/t"
       val merge = StreamImport.foldMerge(StreamImport.transferFold)
-      val stream = loopSession.readStream.format("graft-queue").option("subject", subject).load()
+      val stream = spark.readStream.format("graft-queue").option("subject", subject).load()
       val q = StreamImport.importLoop(stream)
         .writeStream.outputMode("append")
         .option("checkpointLocation",
@@ -188,14 +178,14 @@ class QueueSourceSpec extends SparkSpec {
       // batch 1: u1 complete, u2's orphan activity, u3's orphans
       QueueHub.publish(subject, (u1 ++ u2early ++ u3).map(js))
       q.processAllAvailable()
-      // ONE query, TWO stateful operators
-      assert(q.lastProgress.stateOperators.length == 2,
-        s"expected the buffer AND the fold in one query, got ${q.lastProgress.stateOperators.length}")
+      // ONE query, ONE stateful operator
+      assert(q.lastProgress.stateOperators.length == 1,
+        s"expected only the fold in the query, got ${q.lastProgress.stateOperators.length}")
       val afterFirst = sinkRows()
       assert(afterFirst.keySet == Set(1L),
         s"only the associated instance materializes: ${afterFirst.keySet}")
-      // batch 2: u2's signup arrives → its buffered records flush
-      // THROUGH the fold with the signup, extending the entity
+      // batch 2: u2's signup arrives → the key is associated and its
+      // fold, records before the signup included, reaches the sink
       QueueHub.publish(subject, u2rest.map(js))
       q.processAllAvailable()
       q.stop()
@@ -208,17 +198,6 @@ class QueueSourceSpec extends SparkSpec {
           rs.foldLeft(fold.empty)(fold.step)).head.productIterator.toSeq
         assert(got(key) == want, s"key $key: composed=${got(key)} direct=$want")
       }
-      // the safety check was never disabled on the shared session
-      assert(spark.conf.get(
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled") != "false")
     }
-  }
-
-  test("importLoop refuses to compose while the cross-operator safety check is on") {
-    val strict = spark.newSession()
-    val stream = strict.readStream.format("graft-queue")
-      .option("subject", "zeebe-export-strict").load()
-    val e = intercept[IllegalArgumentException](StreamImport.importLoop(stream))
-    assert(e.getMessage.contains("checkCorrectness"))
   }
 }

@@ -243,29 +243,25 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("import_loop recovers from its checkpoint across a MID-BACKLOG kill (two state operators + merging sink)") {
+  test("import_loop recovers from its checkpoint across a MID-BACKLOG kill (association-gated fold + merging sink)") {
     // The COMPOSED consumer's crash-restart contract end-to-end: run 1
     // is stopped right after its first micro-batch commits, with the
     // rest of the backlog still unread; run 2 is a NEW query on the
-    // SAME checkpoint that must recover BOTH state stores (association
-    // buffer — including an orphan buffered BEFORE the crash whose
-    // signup only arrives after it — and the bounded fold), skip the
-    // committed file, drain the remainder plus a file that arrives
-    // after the crash, and land everything through the idempotent
-    // merging sink. Final rows == the direct per-user fold of every
+    // SAME checkpoint that must recover the fold's state store
+    // (including an orphan folded BEFORE the crash whose signup only
+    // arrives after it), skip the committed file, drain the remainder
+    // plus a file that arrives after the crash, and land everything
+    // through the idempotent merging sink. Final rows == the direct per-user fold of every
     // routed record, bit-for-bit (the reference's at-least-once +
     // idempotent-upsert posture).
     //
     // Arrival is a synthetic NATS-like stream: globally ts-ordered
     // with bounded local disorder — the composition's documented
     // contract (the real corpus's ~72 h pre-signup gaps only fit a
-    // single-batch backlog; chunked arrival beyond the buffer/fold
-    // horizons dead-letters BY DESIGN, which is the bounded-state
+    // single-batch backlog; chunked arrival beyond the fold's
+    // horizons drops orphans BY DESIGN, which is the bounded-state
     // trade, not a crash bug).
     import spark.implicits._
-    val loopSession = spark.newSession()
-    loopSession.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     val t0 = 1704067200000L
     def r(id: Long, ts: Long, u: Long, typ: String, v: Double = 1.0,
         k: Long = 0): StreamImport.Rec = StreamImport.Rec(id, ts, u, typ, v, k)
@@ -285,9 +281,9 @@ class StreamingSpec extends SparkSpec {
     val arrival0 = regular.sortBy(x => (x.ts_ms, x.event_id)).toIndexedSeq
     val quarter = arrival0.length / 4
     val sliceEndTs = arrival0(quarter - 1).ts_ms
-    // the straddler: pre-signup activity arrives in slice 1 (buffered
-    // orphan state at the crash), the signup + tail only in slice 2 —
-    // the flush must happen through the RESTARTED buffer state
+    // the straddler: pre-signup activity arrives in slice 1 (orphan
+    // state at the crash), the signup + tail only in slice 2 — the
+    // association must land on the RESTARTED fold state
     val straddler = 99L
     val sPre = Seq(
       r(9901, sliceEndTs + 10 * 60000L, straddler, "click", 7.5),
@@ -325,7 +321,7 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType)))
     def start(maxFilesPerTrigger: Option[Int],
         trigger: org.apache.spark.sql.streaming.Trigger) = {
-      var reader = loopSession.readStream.schema(valueSchema)
+      var reader = spark.readStream.schema(valueSchema)
       maxFilesPerTrigger.foreach(n =>
         reader = reader.option("maxFilesPerTrigger", n.toString))
       StreamImport.importLoop(reader.parquet(inDir))
@@ -362,6 +358,103 @@ class StreamingSpec extends SparkSpec {
       val want = fold.render(u,
         rs.foldLeft(fold.empty)(fold.step)).head.productIterator.toSeq
       assert(got(u) == want, s"user $u: restarted-loop=${got(u)} direct=$want")
+    }
+  }
+
+  test("import_loop over many horizons: one state operator evicts, orphans never sink, every other key is exact") {
+    // Event time spans 48 h in 2 h micro-batches, far past the loop's
+    // 2 h watermark + 1 h horizon and the 24 h associated-key marker,
+    // so every eviction path runs: orphan removal, associated-key
+    // eviction to a marker, a post-marker burst with no signup, and
+    // marker expiry.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val t0 = 1704067200000L
+    val min = 60000L
+    val hour = 60 * min
+    def js(x: Rec): String =
+      s"""{"event_id":${x.event_id},"ts_ms":${x.ts_ms},"user_id":${x.user_id},""" +
+        s""""event_type":"${x.event_type}","value":${x.value},"k":${x.k}}"""
+    // 88 regular instances, one every 30 min: signup, then four records
+    // within 20 min
+    val regular = (0L until 88L).flatMap { j =>
+      val u = 100 + j
+      val base = t0 + j * 30 * min
+      Seq(mkRec(u * 10, base + min, u, "signup"),
+        mkRec(u * 10 + 1, base + 5 * min, u, "click", value = j + 0.25),
+        mkRec(u * 10 + 2, base + 10 * min, u, "purchase", value = j * 2.5),
+        mkRec(u * 10 + 3, base + 15 * min, u, "view"),
+        mkRec(u * 10 + 4, base + 20 * min, u, "error", k = 80 + j % 20))
+    }
+    // (i) the signup arrives a batch after the instance's activity
+    val lateSignupPre = Seq(mkRec(10, t0 + 6 * hour + 10 * min, 1, "click", value = 3.5),
+      mkRec(11, t0 + 6 * hour + 20 * min, 1, "purchase", value = 12.0))
+    val lateSignup = Seq(mkRec(12, t0 + 8 * hour + 20 * min, 1, "signup"))
+    // (ii) an orphan: its association never arrives
+    val orphan = Seq(mkRec(20, t0 + 10 * hour, 2, "click", value = 1.0),
+      mkRec(21, t0 + 10 * hour + min, 2, "purchase", value = 4.0))
+    // (iii) associated, idle past watermark + horizon, then a burst
+    // with no signup
+    val idleFirst = Seq(mkRec(30, t0 + 12 * hour, 3, "signup"),
+      mkRec(31, t0 + 12 * hour + min, 3, "purchase", value = 25.0))
+    val idleBurst = Seq(mkRec(32, t0 + 20 * hour, 3, "click", value = 7.0),
+      mkRec(33, t0 + 20 * hour + min, 3, "click", value = 9.0))
+    // (iv) more than 1 000 records before the signup
+    val manyPre = (0 until 1200).map(i =>
+      mkRec(100000L + i, t0 + 24 * hour + i * 1000L, 4, "click", value = i * 0.5))
+    val manySignup = Seq(mkRec(99999, t0 + 24 * hour + 30 * min, 4, "signup"))
+    val batches = (0 until 24).map { b =>
+      val from = t0 + b * 2 * hour
+      regular.filter(r => r.ts_ms >= from && r.ts_ms < from + 2 * hour) ++
+        (b match {
+          case 3 => lateSignupPre
+          case 4 => lateSignup
+          case 5 => orphan
+          case 6 => idleFirst
+          case 10 => idleBurst
+          case 12 => manyPre
+          case 13 => manySignup
+          case _ => Nil
+        })
+    }
+    val all = batches.flatten
+    val instances = all.map(_.user_id).distinct.size
+    val stream = MemoryStream[String]
+    val sinkDir = java.nio.file.Files.createTempDirectory("graft_loophz_").toString + "/t"
+    val merge = StreamImport.foldMerge(StreamImport.transferFold)
+    val q = StreamImport.importLoop(stream.toDF())
+      .writeStream.outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_loophzchk_").toString)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        TenantUpsertSink.upsert(sinkDir, b, "entity_key", Some(merge))
+      }
+      .start()
+    val ops = scala.collection.mutable.Map.empty[Long, Seq[(Long, Long)]]
+    batches.foreach { rs =>
+      stream.addData(rs.map(js))
+      q.processAllAvailable()
+      q.recentProgress.foreach(p => ops(p.batchId) =
+        p.stateOperators.toSeq.map(o => (o.numRowsTotal, o.numRowsRemoved)))
+    }
+    q.stop()
+    assert(ops.values.forall(_.length == 1), "the loop must run ONE state operator")
+    val removed = ops.values.map(_.head._2).sum
+    val maxRows = ops.values.map(_.head._1).max
+    assert(removed > 0, "the loop's state operator removed nothing")
+    assert(maxRows < instances,
+      s"state peaked at $maxRows rows for $instances instances — eviction is not bounding it")
+    val got = TenantUpsertSink.readCurrent(spark, sinkDir).get
+      .select(explode(col("rows")).as("r")).select("r.*").collect()
+      .map(w => w.getAs[Long]("transfer_key") -> w.toSeq).toMap
+    val byUser = all.groupBy(_.user_id) - 2L
+    assert(!got.contains(2L), "the orphan reached the sink")
+    assert(got.keySet == byUser.keySet,
+      s"missing=${byUser.keySet -- got.keySet} extra=${got.keySet -- byUser.keySet}")
+    val fold = StreamImport.transferFold
+    byUser.foreach { case (u, rs) =>
+      val want = fold.render(u, rs.foldLeft(fold.empty)(fold.step)).head.productIterator.toSeq
+      assert(got(u) == want, s"user $u: loop=${got(u)} direct=$want")
     }
   }
 
