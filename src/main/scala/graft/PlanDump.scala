@@ -18,9 +18,41 @@ package graft
   * pre-seal segment at materialization time.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> [sfDir] [names]
+  *
+  * `runMain graft.PlanDump --executed [sfDir] [name ...]` instead runs
+  * the headline queries (or the named ones) and prints each one's
+  * executed, post-AQE physical plan to stdout (the PLANS.md source).
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
+  private val Headline = Seq(
+    "q1_pricing", "q3_shipping", "q5_regional", "q9_profit",
+    "imp_entity_transfers", "imp_entity_incremental",
+    "dedup_minhash", "dedup_ngram", "ann_bruteforce", "q_sessionize",
+    "sketch_hll", "sketch_topk", "sketch_quantile", "text_bigram",
+    "q4_priority", "q_pivot", "q_grouping_sets", "q_corr_subquery",
+    "q_salted_agg", "text_repetition", "pipe_quota", "pipe_tokenize")
+
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("--executed")) executed(args.drop(1)) else formatted(args)
+
+  private def executed(args: Array[String]): Unit = {
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val spark = Graft.session(master = "local[4]", shufflePartitions = 4)
+    spark.sparkContext.setLogLevel("ERROR")
+    val names = if (args.length > 1) args.drop(1).toSeq else Headline
+    names.foreach { name =>
+      println(s"===== $name =====")
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      // collect() runs df's OWN QueryExecution (count() would build a
+      // derived aggregate and leave this plan un-executed), so the
+      // printed plan is the post-AQE executed one
+      df.collect()
+      println(df.queryExecution.executedPlan.toString)
+    }
+    spark.stop()
+  }
+
+  private def formatted(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"

@@ -275,7 +275,8 @@ object GraftFunctions {
     ("graft_simhash_keys", classOf[SimhashKeys], simhashKeysBuilder _),
     ("graft_first_simhash_key", classOf[FirstSimhashKey], firstSimhashKeyBuilder _),
     ("graft_adc_dot", classOf[AdcDot], adcDotBuilder _),
-    ("graft_topk", classOf[TopKPairs], topkBuilder _))
+    ("graft_topk", classOf[TopKPairs], topkBuilder _),
+    ("graft_json_long", classOf[JsonLong], JsonLong.builder _))
 
   /** Idempotent for OUR functions: a name already registered with
     * graft's expression class (an earlier register() call, or the

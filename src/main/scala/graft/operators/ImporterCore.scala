@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Portable._
+import graft.sources.RawIngest.payloadK
 import graft.streaming.StreamImport
 import graft.streaming.StreamImport.TransferRow
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -22,7 +23,8 @@ import org.apache.spark.sql.types.LongType
   *     (fatal when payload `k >= 90`, cf. transferCreateFailed
   *     VariableParser.java:185-187).
   *   - `props`      = the record's JSON payload (JsonPath-extracted in
-  *     NatsConsumer.listen via JsonPathReader; here `get_json_object`).
+  *     NatsConsumer.listen via JsonPathReader; here `RawIngest.payloadK`,
+  *     the one byte-level `graft_json_long` kernel every build shares).
   *   - `ts`         = record timestamp (exposed as `ts_ms`).
   *
   * The four entities (Transfer, wide Transfer, TransactionRequest,
@@ -62,22 +64,23 @@ object ImporterCore {
   /** JSON payload extraction + record-type routing
     * (NatsConsumer.listen:39-106: route on $.valueType, drop
     * DEPLOYMENT/VARIABLE_DOCUMENT — here `error` records are the
-    * dropped class). Codegen'd `get_json_object`; the filter pushes to
-    * the scan.
+    * dropped class). The payload field is `payloadK`'s byte-level
+    * parse; the filter pushes to the scan. No materialization before
+    * the presentation sort: its range-bounds sample pass re-runs the
+    * projection, and with the byte-level parse that second pass costs
+    * no more than writing and re-reading the rows (isolated sf0.1
+    * rows).
     */
   def impParseRoute(spark: SparkSession, dir: String): DataFrame =
-    // materialize-once before the presentation sort (r18 plan audit:
-    // the sort's range-bounds sample pass re-ran the JSON extraction)
-    graft.Scratch.cpSorted(
-      Tables.events(spark, dir)
-        .filter(col("event_type") =!= "error")
-        .select(
-          col("event_id"),
-          when(col("event_type").isin(VarTypes: _*), "VARIABLE")
-            .when(col("event_type") === "signup", "PROCESS_INSTANCE")
-            .otherwise("JOB").as("value_type"),
-          get_json_object(col("props"), "$.k").cast(LongType).as("k")),
-      col("event_id"))
+    Tables.events(spark, dir)
+      .filter(col("event_type") =!= "error")
+      .select(
+        col("event_id"),
+        when(col("event_type").isin(VarTypes: _*), "VARIABLE")
+          .when(col("event_type") === "signup", "PROCESS_INSTANCE")
+          .otherwise("JOB").as("value_type"),
+        payloadK(spark, col("props")).as("k"))
+      .orderBy("event_id")
 
   def impParseRouteSql: String =
     """SELECT event_id,
@@ -137,7 +140,7 @@ object ImporterCore {
   def impTaskDedup(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
       .withColumn("intent",
-        when(get_json_object(col("props"), "$.k").cast(LongType) < 50, "CREATED")
+        when(payloadK(spark, col("props")) < 50, "CREATED")
           .otherwise("COMPLETED"))
     val w = Window.partitionBy("user_id", "event_type", "intent")
       .orderBy("event_id")
@@ -233,7 +236,7 @@ object ImporterCore {
       .groupBy("user_id")
       .agg(
         max(when(col("event_type") === "error" &&
-          get_json_object(col("props"), "$.k").cast(LongType) >= 90, 1).otherwise(0)).as("failed"),
+          payloadK(spark, col("props")) >= 90, 1).otherwise(0)).as("failed"),
         max(when(col("event_type") === "purchase", 1).otherwise(0)).as("completed"))
       .select(
         col("user_id"),
@@ -380,16 +383,15 @@ object ImporterCore {
     * reference's processVariable guards inserts.
     */
   def impVariables(spark: SparkSession, dir: String): DataFrame =
-    // materialize-once before the presentation sort (r18 plan audit)
-    graft.Scratch.cpSorted(Tables.events(spark, dir)
+    Tables.events(spark, dir)
       .filter(col("event_type").isin("click", "view", "purchase"))
       .select(
         col("event_id").as("record_key"),
         col("user_id").as("instance_key"),
         col("ts_ms"),
         col("event_type").as("name"),
-        moneyStr(dec2(col("value"))).as("value")),
-      col("record_key"))
+        moneyStr(dec2(col("value"))).as("value"))
+      .orderBy("record_key")
 
   def impVariablesSql: String =
     """SELECT event_id AS record_key, user_id AS instance_key,
@@ -402,17 +404,16 @@ object ImporterCore {
     * timestamp, intent, recordType, type, elementId — §1 data model).
     */
   def impTasks(spark: SparkSession, dir: String): DataFrame =
-    // materialize-once before the presentation sort (r18 plan audit)
-    graft.Scratch.cpSorted(Tables.events(spark, dir)
+    Tables.events(spark, dir)
       .select(
         col("event_id").as("record_key"),
         col("user_id").as("instance_key"),
         col("ts_ms"),
-        when(get_json_object(col("props"), "$.k").cast(LongType) < 50, "CREATED")
+        when(payloadK(spark, col("props")) < 50, "CREATED")
           .otherwise("COMPLETED").as("intent"),
         lit("JOB").as("record_type"),
-        col("event_type").as("element_id")),
-      col("record_key"))
+        col("event_type").as("element_id"))
+      .orderBy("record_key")
 
   def impTasksSql: String =
     """SELECT event_id AS record_key, user_id AS instance_key,
@@ -697,7 +698,7 @@ object ImporterCore {
     * collect_list per key is safe.
     */
   def impTransferDetail(spark: SparkSession, dir: String): DataFrame = {
-    val k = get_json_object(col("props"), "$.k").cast(LongType)
+    val k = payloadK(spark, col("props"))
     val isVar = col("event_type").isin(VarTypes: _*)
     val isFatal = col("event_type") === "error" && k >= 90
     val taskS = format_string("%s:%s#%020d", col("event_type"),

@@ -47,7 +47,7 @@ object FileFormats {
       min("ts_ms").cast(LongType).as("lo_ts"),
       max("ts_ms").cast(LongType).as("hi_ts"),
       moneyStr(sum(dec2(col("value")))).as("sum_value"),
-      sum(get_json_object(col("props"), "$.k").cast(LongType))
+      sum(RawIngest.payloadK(events.sparkSession, col("props")))
         .cast(LongType).as("sum_k"))
       .orderBy("event_type")
 

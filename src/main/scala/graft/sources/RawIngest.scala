@@ -1,8 +1,8 @@
 package graft.sources
 
 import graft.Tables
-import graft.functions.Portable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{GraftFunctions, Portable}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -15,12 +15,26 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 object RawIngest {
 
+  /** The payload field `k` of an events-shaped `props` string, as a
+    * long: the one extraction every importer build and the stream's
+    * record typing share (`graft_json_long(props, 'k')`, the native
+    * byte-level parse; it equals
+    * `CAST(get_json_object(props, '$.k') AS BIGINT)` on every input).
+    * It resolves in `spark`'s function registry, so the cast takes that
+    * session's ANSI mode at analysis, as the built-in cast does.
+    */
+  def payloadK(spark: SparkSession, props: Column): Column = {
+    GraftFunctions.register(spark)
+    call_function("graft_json_long", props, lit("k"))
+  }
+
   /** Explicit export-record schema: ONE `from_json` parse per record,
     * then struct field access — the reference parses each message
     * once too (NatsConsumer.java:36, a single JsonPathReader over the
-    * payload). Independent `get_json_object` calls would re-parse the
-    * string per extracted field (7× per record in round 1 — the most
-    * expensive importer op in the bench).
+    * payload). Extracting fields one by one would re-parse the string
+    * per field (7 path extractions per record in round 1, the most
+    * expensive importer op in the bench); [[payloadK]] is the
+    * one-field case, for frames whose record is already split.
     */
   val recordSchema: StructType = StructType(Seq(
     StructField("valueType", StringType),
@@ -80,7 +94,7 @@ object RawIngest {
         col("user_id").as("workflowInstanceKey"),
         concat(col("event_type"), lit("-proc-t"), (col("user_id") % 10).cast(LongType)).as("bpmnProcessId"),
         col("event_id").as("recordId"),
-        struct(get_json_object(col("props"), "$.k").cast(LongType).as("k")).as("payload")
+        struct(payloadK(spark, col("props")).as("k")).as("payload")
       ).as("value"))).as("value"))
 
   /** Batch demo: events → raw JSON strings → parse/route/split — the

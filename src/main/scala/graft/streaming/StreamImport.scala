@@ -568,7 +568,7 @@ object StreamImport {
     import events.sparkSession.implicits._
     val k =
       if (events.columns.contains("props"))
-        coalesce(get_json_object(col("props"), "$.k").cast(LongType), lit(0L))
+        coalesce(graft.sources.RawIngest.payloadK(events.sparkSession, col("props")), lit(0L))
       else col("k")
     events.select(
       col("event_id"), col("ts_ms"), col("user_id"), col("event_type"),

@@ -4,8 +4,8 @@ import graft.operators.ImporterCore
 
 import java.sql.{Connection, DriverManager}
 
-/** The importer entity builds against their DuckDB oracles, in-suite.
-  * The builds run the streaming folds (`StreamImport.entityBatch`),
+/** Every `ImporterCore` query against its DuckDB oracle, in-suite.
+  * The entity builds run the streaming folds (`StreamImport.entityBatch`),
   * so the stream-vs-batch specs compare two runs of one definition;
   * the hand-written `*Sql` oracles are the independent reference.
   * Comparison as in tools/check.py: columns sorted by name, every
@@ -13,8 +13,7 @@ import java.sql.{Connection, DriverManager}
   */
 class EntityOracleSpec extends SparkSpec {
 
-  private val entities = Seq("imp_entity_transfers", "imp_entity_wide",
-    "imp_entity_txnreq", "imp_entity_batches", "imp_entity_incremental")
+  private val entities = ImporterCore.queries.keys.filter(ImporterCore.oracles.contains).toSeq.sorted
 
   private lazy val duck: Connection = {
     Class.forName("org.duckdb.DuckDBDriver")
@@ -26,6 +25,8 @@ class EntityOracleSpec extends SparkSpec {
 
   override def afterAll(): Unit = {
     duck.close()
+    // the materialized queries (imp_parse_route, the dedups) are done
+    Scratch.releaseAll()
     super.afterAll()
   }
 
@@ -42,6 +43,10 @@ class EntityOracleSpec extends SparkSpec {
     val rows = Iterator.continually(rs).takeWhile(_.next())
       .map(r => cols.indices.map(i => String.valueOf(r.getString(i + 1)))).toVector
     normalized(cols, rows)
+  }
+
+  test("every ImporterCore query with an oracle is replayed") {
+    assert(entities.length == 17)
   }
 
   entities.foreach { name =>

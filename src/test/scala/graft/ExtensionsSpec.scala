@@ -44,6 +44,11 @@ class ExtensionsSpec extends SparkSpec {
       // null elements equal nothing (they break runs); empty folds to 0
       assert(one("SELECT graft_maxrun(array('a', CAST(NULL AS STRING), 'a'))") == 1L)
       assert(one("SELECT graft_maxrun(CAST(array() AS array<string>))") == 0L)
+      // the payload kernel: fast path, and a quoted value through the
+      // reference cast
+      assert(one("""SELECT graft_json_long('{"a":[1],"k":41}', 'k')""") == 41L)
+      assert(one("""SELECT graft_json_long('{"k":"7"}', 'k')""") == 7L)
+      intercept[org.apache.spark.sql.AnalysisException](one("SELECT graft_json_long(1, 'k')"))
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -177,4 +177,128 @@ class FunctionsPropertySpec extends SparkSpec {
     // inputs — consumers must keep the isNull check in codegen
     assert(df.selectExpr(s"$native AS a").schema("a").nullable)
   }
+
+  /** `graft_json_long`'s corner inputs: every fast-path exit and every
+    * fallback class; `None` is a null input.
+    */
+  private val jsonLongCorners: Seq[Option[String]] = {
+    val q = "\""
+    Seq(
+      """{"k":5}""", """{"a":1,"k":42,"b":"x"}""", """{"k":-7}""", """{"k":0}""",
+      """{"k":-0}""", s"""{"k":${Long.MinValue}}""", s"""{"k":${Long.MaxValue}}""",
+      """{"k":9223372036854775808}""", """{"k":-9223372036854775809}""",
+      """{"k":123456789012345678901234567890}""",
+      // floats and exponents
+      """{"k":1.5}""", """{"k":-2.0}""", """{"k":1e3}""", """{"k":1E+2}""",
+      """{"k":2.5e-3}""", """{"k":1e400}""", """{"k":-0.0}""",
+      // quoted numbers and other scalars
+      """{"k":"12"}""", """{"k":" 12 "}""", """{"k":"abc"}""", """{"k":"1.9"}""",
+      """{"k":""}""", """{"k":"-9223372036854775809"}""", """{"k":true}""", """{"k":false}""",
+      // nested objects and arrays
+      """{"k":{"a":1}}""", """{"k":[1,2]}""", """{"a":{"k":1}}""", """{"a":[{"k":1}],"k":3}""",
+      """{"a":{"b":[1,{"c":2}]},"k":11}""",
+      // JSON null, missing field, duplicate keys, escaped keys
+      """{"k":null}""", """{"k":null,"k":4}""", """{"a":1}""", """{}""", """{"K":1}""",
+      """{"kk":1}""", """{"k":1,"k":2}""", """{"k":"x","k":2}""", """{"k":2,"k":"x"}""",
+      s"{${q}\\u006b$q:9}", s"{${q}\\u006b$q:null,${q}k$q:3}", s"{${q}k\\u0000$q:1}",
+      // whitespace and quoting
+      """ {"k":1}""", """{ "k" : 1 }""", "{\"k\":1}\n", "\t{\"k\":\n2}", """{"k" :1 , "a":2}""",
+      """{'k':3}""", """{"k":'3'}""", """{'k':"3"}""", """{"a":'x',"k":3}""",
+      // control characters (lenient in Spark's factory only)
+      "{\"a\":\"x\u0001y\",\"k\":5}", "{\"k\":5,\"a\":\"\ty\"}", "{\"k\u0001\":1}",
+      // malformed before and after the match, trailing garbage
+      """{"a":,"k":1}""", """{"a":1 "k":2}""", """{"k":1,"a":}""", """{"k":1,""",
+      """{"k":1""", """{"k":1,"a":[}""", """{"k":1,"a":[1,2}""", """{"k":}""",
+      """{"k":1}xyz""", """{"k":1}}""", """{"k":1} {"k":2}""", """{"k":1}]""",
+      """{"k":NaN}""", """{"k":Infinity}""", """{"k":-Infinity}""", """{"k":007}""",
+      """{"k":+1}""", """{"k":01}""", """{"k":1.}""", """{"k":.5}""", """{"k":0x10}""",
+      """{k:1}""", """{"k":1,}""", """{,"k":1}""", """{"k"::1}""",
+      // empty strings, non-object roots, non-ASCII
+      "", "  ", "{", "}", """[{"k":1}]""", "5", "\"k\"", "null", "true", "[]",
+      "{\"é\":1,\"k\":2}", "{\"k\":2,\"n\":\"ü\"}", "{\"k\":\"٣\"}", "﻿{\"k\":1}",
+      "{\"k\":1" + " " * 9000 + "}", "{\"a\":\"" + "x" * 10000 + "\",\"k\":8}"
+    ).map(Some(_)) :+ None
+  }
+
+  /** 500 seeded random objects: small key alphabet (k, K, kk, a, b)
+    * forces duplicates, misses and near-misses; values span every JSON
+    * type; one in four gets one character dropped, doubled or replaced.
+    */
+  private def jsonLongRandom(seed: Int): Seq[Option[String]] = {
+    val rnd = new scala.util.Random(seed)
+    def value(depth: Int): String = rnd.nextInt(11) match {
+      case 0 | 1 | 2 => rnd.nextLong().toString
+      case 3 => (rnd.nextInt(2001) - 1000).toString
+      case 4 => "%.3f".formatLocal(java.util.Locale.ROOT, rnd.nextDouble() * 100 - 50)
+      case 5 => s""""${rnd.nextInt(100)}""""
+      case 6 => "null"
+      case 7 => if (rnd.nextBoolean()) "true" else "false"
+      case 8 if depth < 2 => obj(depth + 1)
+      case 9 if depth < 2 => Seq.fill(rnd.nextInt(3))(value(depth + 1)).mkString("[", ",", "]")
+      case _ => s"${rnd.nextInt(10)}e${rnd.nextInt(5)}"
+    }
+    def obj(depth: Int): String = Seq.fill(rnd.nextInt(5)) {
+      val key = Seq("k", "K", "kk", "a", "b")(rnd.nextInt(5))
+      s""""$key":${value(depth)}"""
+    }.mkString("{", ",", "}")
+    Seq.fill(500) {
+      val s = obj(0)
+      if (rnd.nextInt(4) != 0 || s.length < 3) Some(s)
+      else {
+        val at = rnd.nextInt(s.length)
+        val junks = "{}[],:\"' 0-.x"
+        val junk = junks(rnd.nextInt(junks.length))
+        Some(rnd.nextInt(3) match {
+          case 0 => s.substring(0, at) + s.substring(at + 1)
+          case 1 => s.substring(0, at) + s(at) + s.substring(at)
+          case _ => s.substring(0, at) + junk + s.substring(at + 1)
+        })
+      }
+    }
+  }
+
+  test("graft_json_long equals CAST(get_json_object(s, '$.k') AS BIGINT), values and errors, in both ANSI modes") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val bytesRows = Seq("7B226B223A317D", // {"k":1}
+      "7B22C1AB223A317D", // overlong UTF-8 'k' as the key
+      "7B226B223A312C2261223A22FF227D", // invalid UTF-8 after the match
+      "7B2261223A22E282AC222C226B223A327D") // a valid 3-byte char, then k
+    val inputs = jsonLongCorners ++ jsonLongRandom(5150)
+    // both branches carry real weight: the byte parser answers many
+    // rows, and many go to the reference
+    val fast = inputs.flatten.count(s => graft.functions.JsonLong.fastPath(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s), "k") != graft.functions.JsonLong.Fallback)
+    assert(fast > 150 && inputs.length - fast > 150, s"fast path answered $fast of ${inputs.length}")
+    val got = "graft_json_long(s, 'k')"
+    val ref = "CAST(get_json_object(s, '$.k') AS BIGINT)"
+    def outcome(df: org.apache.spark.sql.DataFrame, e: String): Either[String, Option[Long]] =
+      try Right(Option(df.selectExpr(e).head().get(0)).map(_.asInstanceOf[Long]))
+      catch {
+        case t: org.apache.spark.SparkThrowable => Left(String.valueOf(t.getCondition))
+      }
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      for (ansi <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        // row by row (one-row local relations evaluate interpreted), so a
+        // throwing row is told apart from its neighbours
+        val one = inputs.map(s => Seq(s).toDF("s")) ++
+          bytesRows.map(h => spark.range(1).selectExpr(s"CAST(unhex('$h') AS STRING) AS s"))
+        val outcomes = one.map { df =>
+          val (a, b) = (outcome(df, got), outcome(df, ref))
+          assert(a == b, s"ansi=$ansi on ${df.head().get(0)}: kernel $a, reference $b")
+          b
+        }
+        // the error side really exercised when ANSI is on
+        if (ansi == "true") assert(outcomes.count(_.isLeft) > 20)
+        else assert(outcomes.forall(_.isRight))
+        // generated code over a real scan, on the rows that do not throw
+        val ok = inputs.zip(outcomes).collect { case (s, Right(_)) => s }
+        val scanned = ok.toDF("s").repartition(3)
+        assert(scanned.selectExpr(s"$got AS g", s"$ref AS r")
+          .filter("NOT (g <=> r)").count() == 0, s"ansi=$ansi codegen")
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
 }

@@ -235,4 +235,16 @@ class ImporterCoreSpec extends SparkSpec {
       assert(r.getAs[Long]("var_count") <= r.getAs[Long]("task_count"))
     }
   }
+
+  test("the backfill's six entity builds leave no scratch materialization live") {
+    // a library caller never runs Scratch.releaseAll, so a build that
+    // materializes pins its rows in the block manager
+    val before = Scratch.liveCount
+    Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+      ImporterCore.impEntityTransfers, ImporterCore.impEntityWide,
+      ImporterCore.impEntityTxnreq, ImporterCore.impEntityBatches,
+      ImporterCore.impVariables, ImporterCore.impTasks)
+      .foreach(build => assert(build(spark, sfDir).collect().nonEmpty))
+    assert(Scratch.liveCount == before)
+  }
 }
