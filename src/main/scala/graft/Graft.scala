@@ -19,6 +19,35 @@ object Graft {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
 
+  /** The streaming state store every graft session runs.
+    *
+    * State lives OFF-HEAP in RocksDB (in-box in Spark 4): even
+    * watermark-bounded state at 100 TB (dedup keys, join buffers, the
+    * entity folds' active-horizon keys) should not compete with
+    * execution memory the way the default in-memory
+    * HDFSBackedStateStore does; changelog checkpointing keeps the
+    * per-batch upload incremental. Bounded memory caps the native
+    * (off-JVM-heap) block-cache + memtable footprint across all store
+    * instances — local[32] spins up one store per state partition and
+    * unbounded native memory is invisible to the JVM's own limits.
+    */
+  val stateStoreConfs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true")
+
+  /** A session with graft's confs: [[stateStoreConfs]], and `file:`
+    * paths through [[LocalFs]] ([[LocalFs.confs]], the two
+    * `spark.hadoop.fs.*` entries). Spark's distribution ships no
+    * libhadoop, so Hadoop's local filesystem shells out: its
+    * `setPermission` forks `chmod` and its `getFileLinkStatus` forks
+    * `readlink`, on every checkpoint log, state-store changelog,
+    * checksum and schema file, sink part file and checkpoint rename —
+    * about 0.7 ms each, some 250 per import-loop round. `LocalFs`
+    * overrides those two methods of `RawLocalFileSystem` with
+    * `java.nio` calls.
+    */
   def session(master: String = "local[32]",
       shufflePartitions: Int = 32,
       appName: String = "graft"): SparkSession = {
@@ -33,21 +62,8 @@ object Graft {
       // the corpus' events table carries parquet TIMESTAMP(NANOS),
       // which the vectorized reader only accepts as a raw long
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming state lives OFF-HEAP in RocksDB (in-box in Spark 4):
-      // even watermark-bounded state at 100 TB (dedup keys, join
-      // buffers, the entity folds' active-horizon keys) should not
-      // compete with execution memory the way the default in-memory
-      // HDFSBackedStateStore does; changelog checkpointing keeps the
-      // per-batch upload incremental
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // cap the native (off-JVM-heap) block-cache + memtable footprint
-      // across all store instances — local[32] spins up one store per
-      // state partition and unbounded native memory is invisible to
-      // the JVM's own limits
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
+      .config(stateStoreConfs.toMap)
+      .config(LocalFs.confs.toMap)
       .config("spark.ui.enabled", "false")
       // scratch backend selection (see graft.Scratch): set as a
       // BUILDER conf so Bench/Verify's per-query child sessions

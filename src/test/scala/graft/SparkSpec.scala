@@ -28,6 +28,8 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the production local filesystem, so every spec exercises it
+      .config(LocalFs.confs.toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
