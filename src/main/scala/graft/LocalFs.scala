@@ -37,6 +37,16 @@ object LocalFs {
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
+  /** Delete `f` and, for a directory, everything under it, through
+    * `java.io` (Spark's own recursive delete forks `rm -rf`). A missing
+    * path is a no-op; a directory that cannot be listed keeps its
+    * contents.
+    */
+  def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+  }
+
   private val posix = FileSystems.getDefault.supportedFileAttributeViews.contains("posix")
 
   /** `PosixFilePermission.values` runs owner read … others execute,

@@ -23,11 +23,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a stale dump from a previous run would make the oracle
         // compare silently pass on old results — remove it
-        def rm(f: java.io.File): Unit = if (f.exists()) {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        LocalFs.rmTree(new java.io.File(s"$outDir/$name"))
       }
       // per-query scratch scope (see graft.Scratch)
       Scratch.releaseAll()

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StringType}
+import org.apache.spark.sql.types.{DecimalType, StringType}
 
 /** Column helpers whose results are bit-identical between Spark and the
   * DuckDB oracle (SURVEY.md §6): no raw doubles in query outputs, one
@@ -37,8 +37,6 @@ object Portable {
   /** Double → exact decimal(18,2); both engines round half-up here. */
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
-  def dec6(c: Column): Column = c.cast(DecimalType(18, 6))
-
   /** Render a decimal aggregate as a fixed-scale string so the oracle
     * compare is representation-independent (decimal precision rules
     * differ between engines; the digits don't). NEVER reduce scale in
@@ -55,9 +53,6 @@ object Portable {
   /** For sums of scale-6 triple products (e.g. q9's cost share). */
   def money6Str(c: Column): Column =
     c.cast(DecimalType(38, 6)).cast(StringType)
-
-  /** Timestamp → epoch millis (both engines floor positive µs → ms). */
-  def epochMs(c: Column): Column = unix_millis(c)
 
   /** bpmnProcessId → tenant: everything after the FIRST dash — the
     * reference's split (NatsConsumer: substring(indexOf('-')+1)), which

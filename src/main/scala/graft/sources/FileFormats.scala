@@ -62,12 +62,7 @@ object FileFormats {
         .options(readOpts + ("mode" -> "FAILFAST")).format(fmt).load(work.toString)
       // materialize the digest before the scratch files vanish
       graft.Scratch.cp(digest(back))
-    } finally rm(work)
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-    f.delete()
+    } finally graft.LocalFs.rmTree(work)
   }
 
   /** JSON-lines round-trip: one JSON object per line, splittable,

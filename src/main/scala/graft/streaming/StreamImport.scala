@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.LongType
   * need no reprocessing, and the sink is an idempotent keyed upsert
   * with a monoid MERGE hook — the properties that let the pipeline
   * run with thousands of parallel state partitions. The KEY SET is
-  * bounded too: every keyed fold defaults to watermark-driven
-  * eviction ([[boundedUpdate]]) so state is O(keys active within the
+  * bounded too: every keyed fold runs watermark-driven eviction
+  * ([[boundedUpdate]]) so state is O(keys active within the
   * horizon), not O(keys ever seen) — and an evicted key that comes
   * back re-merges with its sunk row at the sink ([[foldMerge]], the
   * reference's read-modify-write), so eviction never loses or
@@ -128,11 +128,12 @@ object StreamImport {
 
   // ------------------------------------------- bounded-state plumbing
 
-  /** Default watermark delay of the bounded keyed folds: how long a
-    * record may trail the stream's max event time before it counts as
-    * late. A load-bearing correctness parameter — deployments whose
-    * disorder exceeds it drop records — so every entity entry point
-    * threads it as an argument with this value as the default.
+  /** Default watermark delay of the bounded operators (the keyed folds,
+    * and the window and dedup gates): how long a record may trail the
+    * stream's max event time before it counts as late. A load-bearing
+    * correctness parameter — deployments whose disorder exceeds it drop
+    * records — so every entry point threads it as an argument with this
+    * value as the default.
     */
   val FoldWatermark = "30 minutes"
 
@@ -245,19 +246,6 @@ object StreamImport {
     */
   case class SinkRow[O, S](entity_key: Long, tenant: String, rows: Seq[O],
     inc_ts: Long, inc_id: Long, open: S, closed: Option[S])
-
-  /** Unbounded (NoTimeout) keyed fold — exact replay under ARBITRARY
-    * disorder, used by the adversarial-order specs; state is O(keys
-    * ever seen). Consumes map-side [[PreFold]] partials: merging them
-    * is the same monoid as folding the raw records (FoldMonoidSpec).
-    */
-  private def unboundedUpdate[S, O](spec: EntityFold[S, O])(
-      key: Long, parts: Iterator[PreFold[S]], state: GroupState[S]): Iterator[O] = {
-    val st = parts.foldLeft(state.getOption.getOrElse(spec.empty))(
-      (s, p) => spec.merge(s, p.st))
-    state.update(st)
-    spec.render(key, st).iterator
-  }
 
   /** Bounded keyed fold with watermark-driven state EVICTION — the
     * 100 TB posture: state is O(keys active within the horizon), not
@@ -376,39 +364,29 @@ object StreamImport {
   import scala.reflect.runtime.universe.TypeTag
   import org.apache.spark.sql.{Encoder, Encoders}
 
-  /** Shared keyed-fold constructor. Bounded (the production default):
-    * watermark + EventTimeTimeout eviction, emitting [[SinkRow]]s for
-    * the merging sink. Unbounded: NoTimeout, emitting plain entity
-    * rows — exact replay under arbitrary disorder for the
-    * adversarial-order specs.
+  /** The keyed-fold constructor: any [[EntityFold]] over a streaming
+    * events frame, as a watermark + EventTimeTimeout bounded fold
+    * ([[boundedUpdate]]) emitting [[SinkRow]]s for the merging sink
+    * ([[foldMerge]]). Exact for every record within the `watermark`'s
+    * disorder bound, even across the idle-gap evictions `horizonMs`
+    * drives; a caller whose disorder is wider passes a wider watermark.
     *
-    * Both shapes run the map-side [[preFold]] BEFORE the stateful
-    * shuffle, so the exchange carries per-(key, input-partition)
-    * partials, never raw records — a hot key's per-record fold work is
-    * spread across the input partitions and its single stateful task
-    * only merges ≤ one partial per input partition per batch.
-    * The watermark column is assigned on the partial's `max_ts`: the
-    * batch maximum over partials equals the maximum over raw records,
-    * so watermark ADVANCEMENT is unchanged by the pre-fold.
+    * The map-side [[preFold]] runs BEFORE the stateful shuffle, so the
+    * exchange carries per-(key, input-partition) partials, never raw
+    * records — a hot key's per-record fold work is spread across the
+    * input partitions and its single stateful task only merges ≤ one
+    * partial per input partition per batch. The watermark column is
+    * assigned on the partial's `max_ts`: the batch maximum over
+    * partials equals the maximum over raw records, so watermark
+    * ADVANCEMENT is unchanged by the pre-fold.
     */
-  private[graft] def entityStream[S <: Product : TypeTag, O <: Product : TypeTag](
-      events: DataFrame, spec: EntityFold[S, O], bounded: Boolean,
-      watermark: String, horizonMs: Long): DataFrame = {
-    import events.sparkSession.implicits._
-    if (bounded) {
-      implicit val incEnc: Encoder[IncSt[S]] = Encoders.product[IncSt[S]]
-      implicit val outEnc: Encoder[SinkRow[O, S]] = Encoders.product[SinkRow[O, S]]
-      boundedFold(partials(events, spec), watermark, OutputMode.Update)(
-        boundedUpdate(spec, horizonMs))
-    } else {
-      implicit val sEnc: Encoder[S] = Encoders.product[S]
-      implicit val oEnc: Encoder[O] = Encoders.product[O]
-      partials(events, spec)
-        .groupByKey(_.entity_key)
-        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-          unboundedUpdate(spec))
-        .toDF()
-    }
+  def entityStream[S <: Product : TypeTag, O <: Product : TypeTag](
+      events: DataFrame, spec: EntityFold[S, O], watermark: String = FoldWatermark,
+      horizonMs: Long = EvictHorizonMs): DataFrame = {
+    implicit val incEnc: Encoder[IncSt[S]] = Encoders.product[IncSt[S]]
+    implicit val outEnc: Encoder[SinkRow[O, S]] = Encoders.product[SinkRow[O, S]]
+    boundedFold(partials(events, spec), watermark, OutputMode.Update)(
+      boundedUpdate(spec, horizonMs))
   }
 
   /** The bounded keyed operator over partials: the watermark on each
@@ -554,7 +532,7 @@ object StreamImport {
       spark: SparkSession, dir: String, spec: EntityFold[S, O],
       label: String): DataFrame =
     runPipeline(spark, dir,
-      events => entityStream(events, spec, bounded = true, FoldWatermark, EvictHorizonMs),
+      events => entityStream(events, spec),
       "entity_key", merge = Some(foldMerge(spec)), label = label)
       .select(explode(col("rows")).as("r"))
       .select("r.*")
@@ -597,17 +575,6 @@ object StreamImport {
   /** The transfers entity fold as its monoid. */
   val transferFold: EntityFold[St, TransferRow] =
     EntityFold(EmptySt, fold, mergeSt, (k, s) => Seq(render(k, s)), k => "t" + (k % 10))
-
-  /** Incrementally materialized transfers from a streaming events
-    * source. Bounded state by default: emits [[SinkRow]]s for the
-    * merging sink ([[foldMerge]]), exact for every record within the
-    * watermark's disorder bound even across idle-gap evictions.
-    * `bounded=false` keeps every key forever (plain entity-row
-    * emission) for exact replay under arbitrary disorder.
-    */
-  def transfersStream(events: DataFrame, bounded: Boolean = true,
-      watermark: String = FoldWatermark, horizonMs: Long = EvictHorizonMs): DataFrame =
-    entityStream(events, transferFold, bounded, watermark, horizonMs)
 
   // ------------------------------------------------ TransactionRequest
 
@@ -772,10 +739,6 @@ object StreamImport {
   val txnreqFold: EntityFold[TxnSt, TxnRow] =
     EntityFold(EmptyTxnSt, foldTxn, mergeTxn, (k, s) => Seq(renderTxn(k, s)), k => "t" + (k % 10))
 
-  def txnreqStream(events: DataFrame, bounded: Boolean = true,
-      watermark: String = FoldWatermark, horizonMs: Long = EvictHorizonMs): DataFrame =
-    entityStream(events, txnreqFold, bounded, watermark, horizonMs)
-
   /** Streaming TransactionRequest materialization, driver-checked
     * against the SAME oracle as the batch imp_entity_txnreq.
     */
@@ -866,10 +829,6 @@ object StreamImport {
 
   val batchFold: EntityFold[BatchSt, BatchRow] =
     EntityFold(EmptyBatchSt, foldBatch, mergeBatch, (k, s) => Seq(renderBatch(k, s)), k => "t" + (k % 10))
-
-  def batchesStream(events: DataFrame, bounded: Boolean = true,
-      watermark: String = FoldWatermark, horizonMs: Long = EvictHorizonMs): DataFrame =
-    entityStream(events, batchFold, bounded, watermark, horizonMs)
 
   /** Streaming Batch materialization — same oracle as the batch
     * imp_entity_batches.
@@ -1233,10 +1192,6 @@ object StreamImport {
   val wideFold: EntityFold[WideSt, WideRow] =
     EntityFold(EmptyWideSt, foldWide, mergeWide, (k, s) => Seq(renderWide(k, s)), k => "t" + (k % 10))
 
-  def wideStream(events: DataFrame, bounded: Boolean = true,
-      watermark: String = FoldWatermark, horizonMs: Long = EvictHorizonMs): DataFrame =
-    entityStream(events, wideFold, bounded, watermark, horizonMs)
-
   /** Streaming wide-entity materialization — same oracle as the batch
     * imp_entity_wide (nested-JSON extraction semantics included).
     */
@@ -1258,25 +1213,12 @@ object StreamImport {
     * (event_type, 1 h window), count + exact decimal sum, refreshed
     * per micro-batch in update mode and upserted by window key.
     *
-    * The driver-checked query runs UN-watermarked: every window stays
-    * in state, so the result is exact under ANY micro-batch split —
-    * the same contract as the batch groupBy it answers the oracle
-    * with. The 100 TB posture adds a watermark
-    * ([[windowStreamBounded]]): state holds only windows younger than
-    * the horizon, at the documented cost of DROPPING rows that arrive
-    * later than it (StreamingSpec pins exactly that semantics).
+    * Watermarked: state holds only windows younger than `horizon`, at
+    * the documented cost of DROPPING rows that arrive later than it
+    * (StreamingSpec pins exactly that semantics). Within the horizon
+    * the result is exact under any micro-batch split.
     */
-  def windowStream(events: DataFrame): DataFrame =
-    events.select(col("event_type"),
-      timestamp_millis(col("ts_ms")).as("ts"), col("value"))
-      .groupBy(col("event_type"), window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        sum(graft.functions.Portable.dec2(col("value"))).as("sv"))
-
-  /** Bounded-state variant: windows older than the horizon are evicted
-    * and later arrivals for them dropped.
-    */
-  def windowStreamBounded(events: DataFrame, horizon: String): DataFrame =
+  def windowStream(events: DataFrame, horizon: String): DataFrame =
     events.select(col("event_type"),
       timestamp_millis(col("ts_ms")).as("ts"), col("value"))
       .withWatermark("ts", horizon)
@@ -1285,11 +1227,13 @@ object StreamImport {
         sum(graft.functions.Portable.dec2(col("value"))).as("sv"))
 
   /** Driver-checked streaming window aggregate — oracle = the batch
-    * hour-bucket groupBy.
+    * hour-bucket groupBy. The corpus is one file, so the AvailableNow
+    * run folds it in one micro-batch under an unset watermark: no row
+    * is late.
     */
   def runWindowToCompletion(spark: SparkSession, dir: String): DataFrame =
     runPipeline(spark, dir, events =>
-      windowStream(events)
+      windowStream(events, FoldWatermark)
         .select(col("event_type"),
           expr("unix_millis(window.start) div 3600000").as("window_h"),
           col("n"),
@@ -1305,17 +1249,6 @@ object StreamImport {
   /** One emitted leaderboard row. */
   case class TopRow(user_id: Long, rnk: Long, event_id: Long, event_type: String)
 
-  /** Streaming per-key top-n in BOUNDED state: each user's running
-    * top-3 events by value, held as an n-row selection in
-    * `flatMapGroupsWithState` — the arbitrary-state shape for an
-    * aggregate SQL streaming cannot express (per-key ORDER BY…LIMIT).
-    * Bounded selection is a monoid (top-3 of a union = top-3 of
-    * merged top-3s), so arrival order is irrelevant and the state per
-    * key is exactly n rows forever. Each batch re-emits a touched
-    * user's FULL current leaderboard under stable (user, rank) keys,
-    * so the keyed sink upsert replaces displaced entries instead of
-    * leaking them. Answers the batch q_window_topn's SAME oracle.
-    */
   /** Top-n accumulator: the current top-3 selection (a case class so
     * the shared product-encoder machinery covers it).
     */
@@ -1339,12 +1272,19 @@ object StreamImport {
   private def renderTop(user: Long, s: TopSt): Seq[TopRow] =
     s.entries.zipWithIndex.map { case (r, i) => TopRow(user, i + 1L, r.event_id, r.event_type) }
 
+  /** Streaming per-key top-n in BOUNDED state: each user's running
+    * top-3 events by value, held as an n-row selection in
+    * `flatMapGroupsWithState` — the arbitrary-state shape for an
+    * aggregate SQL streaming cannot express (per-key ORDER BY…LIMIT).
+    * Bounded selection is a monoid (top-3 of a union = top-3 of
+    * merged top-3s), so arrival order is irrelevant and the state per
+    * key is exactly n rows forever. Each batch re-emits a touched
+    * user's FULL current leaderboard as one [[SinkRow]], so the
+    * merging sink replaces displaced entries instead of leaking them.
+    * Answers the batch q_window_topn's SAME oracle.
+    */
   val topnFold: EntityFold[TopSt, TopRow] =
     EntityFold(TopSt(Seq.empty), stepTop, mergeTop, renderTop, k => "t" + (k % 10))
-
-  def topnStream(events: DataFrame, bounded: Boolean = true,
-      watermark: String = FoldWatermark, horizonMs: Long = EvictHorizonMs): DataFrame =
-    entityStream(events, topnFold, bounded, watermark, horizonMs)
 
   /** Driver-checked streaming leaderboard — oracle = the batch
     * per-user window top-3.
@@ -1359,8 +1299,8 @@ object StreamImport {
   /** Streaming distinct counting in CONSTANT state: the HLL register
     * table maintained as a streaming aggregate. The state is exactly
     * groups × 256 register rows no matter how many billions of keys
-    * stream through — where [[dedupStream]]'s exact state grows with
-    * distinct keys, this is the sketch answer to infinite-stream
+    * stream through — where [[dedupStream]]'s state grows with the
+    * distinct keys inside its horizon, this is the sketch answer to infinite-stream
     * cardinality. Update mode re-emits a register row only when its
     * max grows; the keyed sink upserts it. Same register derivation —
     * and the SAME oracle — as the batch
@@ -1486,9 +1426,7 @@ object StreamImport {
     // TextOps.appendWindowIndex (merge ≡ recompute is spec-pinned)
     val corpusIdx = graft.Scratch.cp(graft.operators.TextOps.windowIndexOf(
       Tables.documents(spark, dir).filter(col("doc_id") % 10 =!= 7)))
-    val rawSchema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = fileStream(spark, dir, "documents.parquet")
     val agg = graft.operators.TextOps.substringWindows(
         stream.filter(col("doc_id") % 10 === 7))
       .join(corpusIdx, Seq("h"), "left_outer")
@@ -1521,9 +1459,7 @@ object StreamImport {
       graft.operators.TextOps.winnowFps(
         Tables.documents(spark, dir).filter(col("doc_id") % 10 =!= 7))
         .select("fp").distinct().withColumn("hit", lit(1L)))
-    val rawSchema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = fileStream(spark, dir, "documents.parquet")
     val agg = graft.operators.TextOps.winnowFps(
         stream.filter(col("doc_id") % 10 === 7))
       .join(corpusIdx, Seq("fp"), "left_outer")
@@ -1595,9 +1531,7 @@ object StreamImport {
     */
   def runPackToCompletion(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val rawSchema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = fileStream(spark, dir, "documents.parquet")
     val out = packStream(stream).toDF()
       .withColumn("dkey", col("doc_id").cast("string"))
       .withColumn("tenant", concat(lit("t"), col("shard")))
@@ -1626,9 +1560,7 @@ object StreamImport {
       graft.operators.TextOps.bandedOf(
         Tables.documents(spark, dir).filter(col("doc_id") % 10 =!= 7), k, 2)
         .withColumnRenamed("doc_id", "old_id"))
-    val rawSchema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = fileStream(spark, dir, "documents.parquet")
     val agg = graft.operators.TextOps.bandedOf(
         stream.filter(col("doc_id") % 10 === 7), k, 2)
       .join(corpusIdx, Seq("band_idx", "band_key"))
@@ -1734,7 +1666,7 @@ object StreamImport {
     * idempotent re-inserts, so micro-batch splits and arrival order
     * are invisible. Each batch re-emits the probe's full top list
     * under stable (q_id, rnk) keys — a displaced neighbor's rank is
-    * simply overwritten at the sink, [[topnStream]]'s contract.
+    * simply overwritten at the sink.
     *
     * At 100 TB: the index is yesterday's artifact (here it
     * materializes once via Scratch); per micro-batch cost is
@@ -1781,9 +1713,7 @@ object StreamImport {
             .filter(col("vec_id") % 10 =!= 7)))
         .select(col("vec_id").as("n_id"), col("q").as("nq"), col("n2").as("nn2"),
           col("band_idx"), col("bucket")))
-    val rawSchema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val stream = fileStream(spark, dir, "embeddings.parquet")
     val probes = VectorOps.quantizePlan(stream.filter(col("vec_id") % 10 === 7))
     val out = annStream(probes, corpusIdx)
       .withColumn("akey", concat_ws("_", col("q_id"), col("rnk")))
@@ -1852,35 +1782,20 @@ object StreamImport {
     * user's purchases within the following hour. Both sides carry
     * watermarks and the join condition carries the event-time range,
     * which is what lets Spark EVICT state (a click older than
-    * watermark − 1 h can never match again); an INNER join emits each
-    * match as soon as both sides are seen, so results are exact under
-    * any micro-batch split — cross-batch matches come out of the
-    * buffered state, pinned by the chunked StreamingSpec run.
+    * watermark − 1 h can never match again).
+    *
+    *   - `"inner"`: each match emits as soon as both sides are seen, so
+    *     results are exact under any micro-batch split — cross-batch
+    *     matches come out of the buffered state, pinned by the chunked
+    *     StreamingSpec run;
+    *   - `"left_outer"`: the matches plus the unmatched clicks (NO
+    *     purchase within the following hour), which the ops-UI
+    *     correlation read also needs. A null-extended row emits only
+    *     when the WATERMARK closes its click's match window
+    *     (c_ts + 1 h), i.e. the click provably can never match — state
+    *     stays bounded exactly as in the inner join.
     */
-  def joinStream(events: DataFrame): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        timestamp_millis(col("ts_ms")).as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        timestamp_millis(col("ts_ms")).as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
-  }
-
-  /** LEFT OUTER event-time stream-stream join — [[joinStream]] plus
-    * the unmatched rows (clicks with NO purchase within the following
-    * hour), which the ops-UI correlation read also needs. Matches emit
-    * eagerly like the inner join; a null-extended row for an unmatched
-    * click emits only when the WATERMARK closes its match window
-    * (c_ts + 1 h), i.e. the click provably can never match — state
-    * stays bounded exactly as in the inner join.
-    */
-  def joinOuterStream(events: DataFrame): DataFrame = {
+  def joinStream(events: DataFrame, joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         timestamp_millis(col("ts_ms")).as("c_ts"))
@@ -1893,7 +1808,7 @@ object StreamImport {
       col("user_id") === col("p_user") &&
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-      "left_outer")
+      joinType)
   }
 
   /** Driver-checked left-outer stream join. Determinism at stream end:
@@ -1921,7 +1836,7 @@ object StreamImport {
       max(when(col("event_type") === "purchase", col("ts_ms")))).head()
     val cutoff = math.min(m.getLong(0), m.getLong(1)) - 3L * 3600 * 1000
     runPipeline(spark, dir, events =>
-      joinOuterStream(events)
+      joinStream(events, "left_outer")
         .select(col("click_id"),
           coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
           col("user_id"), unix_millis(col("c_ts")).as("c_ts_ms"))
@@ -1938,7 +1853,7 @@ object StreamImport {
     */
   def runJoinToCompletion(spark: SparkSession, dir: String): DataFrame =
     runPipeline(spark, dir, events =>
-      joinStream(events)
+      joinStream(events, "inner")
         .select(col("click_id"), col("purchase_id"), col("user_id"))
         .withColumn("pair_key", concat(col("click_id"), lit("_"), col("purchase_id")))
         .withColumn("tenant", concat(lit("t"), col("user_id") % 10)),
@@ -1948,30 +1863,18 @@ object StreamImport {
 
   // ------------------------------------------------------------ Dedup
 
-  /** Streaming exact dedup on (user_id, event_type) — the streaming
-    * mirror of the reference's first-write dedup guards
+  /** Streaming dedup on (user_id, event_type) — the streaming mirror
+    * of the reference's first-write dedup guards
     * (RecordParser.processVariable/processTask): emit each key once,
-    * drop every later duplicate. `dropDuplicates` keeps one state row
-    * PER DISTINCT KEY, the same cardinality the batch distinct
-    * shuffles — at 100 TB the state is bounded with a watermark
-    * (`withWatermark` + per-key expiry) and exactness is restored by
-    * the keyed idempotent sink: a key re-emitted after its state
-    * expired upserts onto its existing row, a no-op. The watermarked
-    * variant and that end-to-end property are pinned in StreamingSpec.
-    */
-  def dedupStream(events: DataFrame): DataFrame =
-    events.select(col("user_id"), col("event_type"))
-      .dropDuplicates("user_id", "event_type")
-
-  /** The BOUNDED-state variant: watermark + per-key expiry
+    * drop every later duplicate, with a watermark + per-key expiry
     * (`dropDuplicatesWithinWatermark`). State holds only keys younger
-    * than the horizon — the 100 TB shape — at the cost of re-emitting
-    * a key whose duplicates straddle an expired horizon; the keyed
-    * idempotent sink absorbs the re-emission (upsert onto the existing
-    * row), restoring exact end-to-end semantics. StreamingSpec pins
-    * both halves (re-emission happens; the sink collapses it).
+    * than `horizon`, at the cost of re-emitting a key whose duplicates
+    * straddle an expired horizon; the keyed idempotent sink absorbs the
+    * re-emission (upsert onto the existing row), restoring exact
+    * end-to-end semantics. StreamingSpec pins both halves (re-emission
+    * happens; the sink collapses it).
     */
-  def dedupStreamBounded(events: DataFrame, horizon: String): DataFrame =
+  def dedupStream(events: DataFrame, horizon: String): DataFrame =
     events.select(col("user_id"), col("event_type"),
       timestamp_millis(col("ts_ms")).as("ts"))
       .withWatermark("ts", horizon)
@@ -2021,13 +1924,16 @@ object StreamImport {
       |       ELSE '__dead_letter__' END AS process_id
       |FROM events ORDER BY event_id""".stripMargin
 
-  /** Driver-checked streaming dedup — oracle = batch SELECT DISTINCT. */
+  /** Driver-checked streaming dedup — oracle = batch SELECT DISTINCT.
+    * One file, one AvailableNow micro-batch: no row is late and no key
+    * expires mid-data.
+    */
   def runDedupToCompletion(spark: SparkSession, dir: String): DataFrame =
     runPipeline(spark, dir, events =>
-      dedupStream(events)
+      dedupStream(events, FoldWatermark)
         .withColumn("dedup_key", concat(col("user_id"), lit("_"), col("event_type")))
         .withColumn("tenant", concat(lit("t"), col("user_id") % 10)),
-      "dedup_key", label = "stream_dedup")
+      "dedup_key", mode = "append", label = "stream_dedup")
       .select("user_id", "event_type")
       .orderBy("user_id", "event_type")
 
@@ -2136,26 +2042,22 @@ object StreamImport {
       } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  private def rmTree(f: java.io.File): Unit = if (f.exists()) {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete()
-  }
-
   /** Shared sink-run-readback-cleanup plumbing for the AvailableNow
     * runners: run `frame` (an already-composed streaming frame) into
     * the tenant-routed upsert sink under a fresh temp work dir, read
     * the sink back (Scratch-materialized, so the result detaches from
     * the temp files — a lazy plan over deleted parquet would fail at
     * consume time), and reclaim the work dir in a `finally` so a
-    * failed query can't leak it.
+    * failed query can't leak it. The metrics listener is removed in
+    * the same way, also when the query fails to start.
     */
-  private def runStreamToSink(spark: SparkSession, label: String,
+  private[graft] def runStreamToSink(spark: SparkSession, label: String,
       frame: DataFrame, key: String, mode: String = "update",
       merge: Option[(DataFrame, DataFrame) => DataFrame] = None): DataFrame = {
     val work = java.nio.file.Files.createTempDirectory("graft_stream_").toString
+    val metrics = new StateMetricsListener
     try {
       val sinkDir = s"$work/sink"
-      val metrics = new StateMetricsListener
       spark.streams.addListener(metrics)
       // sink seconds accumulate separately: addBatch = state-op
       // execution ∪ the per-batch parquet upsert, and optimizing the
@@ -2172,14 +2074,24 @@ object StreamImport {
         }
         .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination()
-      finally spark.streams.removeListener(metrics)
+      q.awaitTermination()
       metrics.log(q, label)
       System.err.println(f"[graft-sink] $label: sink=${sinkSec.sum}%.2fs")
       graft.Scratch.cp(TenantUpsertSink.readCurrent(spark, sinkDir)
         .getOrElse(throw new IllegalStateException(s"no data reached the sink at $sinkDir")))
-    } finally rmTree(new java.io.File(work))
+    } finally {
+      spark.streams.removeListener(metrics)
+      graft.LocalFs.rmTree(new java.io.File(work))
+    }
   }
+
+  /** One parquet file of the sf dir as a stream, under the schema the
+    * batch reader sees: the streaming file source wants a directory, so
+    * it streams `dir` with a glob pinned to `file`.
+    */
+  private def fileStream(spark: SparkSession, dir: String, file: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(s"$dir/$file").schema)
+      .option("pathGlobFilter", file).parquet(dir)
 
   /** Shared end-to-end runner: stream the sf dir's events file through
     * `transform` with an AvailableNow trigger into the tenant-routed
@@ -2195,13 +2107,7 @@ object StreamImport {
     // generation); normalization then comes from the SAME
     // type-adaptive helper the batch loader uses.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // the streaming file source wants a directory: stream the sf dir
-    // with a glob pinned to the events file
-    val stream = Tables.normalizeEvents(spark.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
+    val stream = Tables.normalizeEvents(fileStream(spark, dir, "events.parquet"))
     runStreamToSink(spark, s"$label@$dir", transform(stream), key, mode, merge)
   }
 
@@ -2283,10 +2189,10 @@ object StreamImport {
     */
   def runSrcQueueToCompletion(spark: SparkSession, dir: String): DataFrame = {
     val subject = s"zeebe-export-src-${System.nanoTime()}"
-    publishChunked(subject,
-      graft.sources.RawIngest.rawRecords(spark, dir).as[String](Encoders.STRING))
     val work = java.nio.file.Files.createTempDirectory("graft_srcq_").toString
     val result = try {
+      publishChunked(subject,
+        graft.sources.RawIngest.rawRecords(spark, dir).as[String](Encoders.STRING))
       val stream = spark.readStream.format("graft-queue")
         .option("subject", subject).load()
       val parsed = graft.sources.RawIngest.parse(stream)
@@ -2295,12 +2201,14 @@ object StreamImport {
         .option("checkpointLocation", s"$work/chk")
         .format("parquet").option("path", sinkDir)
         .start()
-      try { q.processAllAvailable(); q.stop(); q.awaitTermination() }
-      finally graft.sources.QueueHub.clear(subject)
+      q.processAllAvailable(); q.stop(); q.awaitTermination()
       // eager cp before the temp dir is removed (both scratch backends
       // materialize on the spot)
       graft.Scratch.cp(spark.read.schema(parsed.schema).parquet(sinkDir))
-    } finally rmTree(new java.io.File(work))
+    } finally {
+      graft.sources.QueueHub.clear(subject)
+      graft.LocalFs.rmTree(new java.io.File(work))
+    }
     result.orderBy("record_id")
   }
 
@@ -2317,19 +2225,20 @@ object StreamImport {
     */
   def runImportLoopToCompletion(spark: SparkSession, dir: String): DataFrame = {
     val subject = s"zeebe-export-gate-${System.nanoTime()}"
-    publishChunked(subject, toRecs(Tables.events(spark, dir))
-      .orderBy("ts_ms", "event_id")
-      .select(to_json(struct(col("event_id"), col("ts_ms"), col("user_id"),
-        col("event_type"), col("value"), col("k"))))
-      .as[String](Encoders.STRING))
-    val stream = spark.readStream.format("graft-queue").option("subject", subject).load()
-    try runStreamToSink(spark, s"import_loop@$dir", importLoop(stream), "entity_key",
-        mode = "append", merge = Some(foldMerge(transferFold)))
-      .select(explode(col("rows")).as("r")).select("r.*")
-      .select("transfer_key", "tenant", "started_ms", "completed_ms",
-        "amount", "last_click_value", "status", "n_events")
-      .orderBy("transfer_key")
-    finally graft.sources.QueueHub.clear(subject)
+    try {
+      publishChunked(subject, toRecs(Tables.events(spark, dir))
+        .orderBy("ts_ms", "event_id")
+        .select(to_json(struct(col("event_id"), col("ts_ms"), col("user_id"),
+          col("event_type"), col("value"), col("k"))))
+        .as[String](Encoders.STRING))
+      val stream = spark.readStream.format("graft-queue").option("subject", subject).load()
+      runStreamToSink(spark, s"import_loop@$dir", importLoop(stream), "entity_key",
+          mode = "append", merge = Some(foldMerge(transferFold)))
+        .select(explode(col("rows")).as("r")).select("r.*")
+        .select("transfer_key", "tenant", "started_ms", "completed_ms",
+          "amount", "last_click_value", "status", "n_events")
+        .orderBy("transfer_key")
+    } finally graft.sources.QueueHub.clear(subject)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

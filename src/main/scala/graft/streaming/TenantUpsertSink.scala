@@ -266,12 +266,7 @@ object TenantUpsertSink {
       new java.io.File(tableDir).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("gen-") &&
           !referenced.contains(f.getName))
-        .foreach(delete)
+        .foreach(graft.LocalFs.rmTree)
     } finally batch.unpersist()
-  }
-
-  private def delete(f: java.io.File): Unit = if (f.exists()) {
-    if (f.isDirectory) f.listFiles().foreach(delete)
-    f.delete()
   }
 }

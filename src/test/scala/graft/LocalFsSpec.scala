@@ -18,9 +18,9 @@ import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Op
   RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** [[LocalFs]] against Hadoop's own `RawLocalFileSystem`, and the
-  * process starts of one import-loop micro-batch on the production
-  * state store.
+/** [[LocalFs]] against Hadoop's own `RawLocalFileSystem`, the spec
+  * session's production confs, and the process starts of one
+  * import-loop micro-batch on the production state store.
   */
 class LocalFsSpec extends SparkSpec {
 
@@ -105,12 +105,25 @@ class LocalFsSpec extends SparkSpec {
     assert(fc.delete(dir, true) && !fc.util.exists(dir))
   }
 
-  test("one import-loop micro-batch on RocksDB and one ImporterCore write start no chmod and no readlink") {
+  test("rmTree deletes a nested tree and ignores a missing path") {
+    val dir = Files.createTempDirectory("graft_lfs_rm_")
+    Files.write(Files.createDirectories(dir.resolve("a/b")).resolve("f"), "x".getBytes(UTF_8))
+    Files.write(dir.resolve("g"), "y".getBytes(UTF_8))
+    LocalFs.rmTree(dir.toFile)
+    assert(!Files.exists(dir))
+    LocalFs.rmTree(dir.toFile)
+  }
+
+  test("the spec session is the production session: RocksDB state store, graft file binding") {
+    assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") ==
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    Graft.stateStoreConfs.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
     // the session's FileSystem cache holds the graft binding
     assert(FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
       .isInstanceOf[NioLocalFileSystem])
-    val s = spark.newSession()
-    Graft.stateStoreConfs.foreach { case (k, v) => s.conf.set(k, v) }
+  }
+
+  test("one import-loop micro-batch on RocksDB and one ImporterCore write start no chmod and no readlink") {
     val work = Files.createTempDirectory("graft_lfs_loop_").toString
     val subject = s"graft-lfs-${System.nanoTime()}"
     def js(r: StreamImport.Rec): String =
@@ -118,7 +131,7 @@ class LocalFsSpec extends SparkSpec {
         s""""event_type":"${r.event_type}","value":${r.value},"k":${r.k}}"""
     QueueHub.publish(subject,
       StreamImport.toRecs(Tables.events(spark, sfDir)).collect().map(js).toIndexedSeq)
-    val stream = s.readStream.format("graft-queue").option("subject", subject).load()
+    val stream = spark.readStream.format("graft-queue").option("subject", subject).load()
     val merge = StreamImport.foldMerge(StreamImport.transferFold)
 
     val rec = new Recording()

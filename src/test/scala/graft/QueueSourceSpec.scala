@@ -57,7 +57,7 @@ class QueueSourceSpec extends SparkSpec {
     val events = stream.select(from_json(col("value"), recSchema).as("r")).select("r.*")
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_qfold_").toString + "/t"
     val merge = StreamImport.foldMerge(StreamImport.transferFold)
-    val q = StreamImport.transfersStream(events) // bounded production default
+    val q = StreamImport.entityStream(events, StreamImport.transferFold) // production defaults
       .writeStream.outputMode("update")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_qfoldchk_").toString)

@@ -21,16 +21,12 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The production session ([[Graft.session]]: the RocksDB state
+    * store, the [[LocalFs]] binding and graft's confs), sized for
+    * specs.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production local filesystem, so every spec exercises it
-      .config(LocalFs.confs.toMap)
-      .getOrCreate()
+    val s = Graft.session(master = "local[4]", shufflePartitions = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

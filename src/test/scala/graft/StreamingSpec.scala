@@ -2,9 +2,12 @@ package graft
 
 import graft.operators.{ImporterCore, Multimodal}
 import graft.streaming.{JdbcUpsert, OutOfOrder, StreamImport, TenantUpsertSink}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import scala.reflect.runtime.universe.TypeTag
 
 class StreamingSpec extends SparkSpec {
 
@@ -14,31 +17,47 @@ class StreamingSpec extends SparkSpec {
       value: Double = 10.0, k: Long = 0): Rec =
     Rec(id, tsMs, user, typ, value, k)
 
-  test("stream_import over micro-batches equals the batch transfers entity") {
+  /** A watermark wider than any disorder these specs feed: the corpora
+    * span 30 days of event time, so even a shuffled arrival leaves no
+    * record late and no key evicted.
+    */
+  private val NoLate = "365 days"
+
+  /** `chunks`, one micro-batch each, through the bounded fold of `spec`
+    * into the merging sink ([[StreamImport.foldMerge]]): the rendered
+    * entity rows the sink holds at the end.
+    */
+  private def foldedRows[S <: Product : TypeTag, O <: Product : TypeTag](
+      spec: StreamImport.EntityFold[S, O], chunks: Iterator[Seq[Rec]],
+      watermark: String = NoLate,
+      horizonMs: Long = StreamImport.EvictHorizonMs): DataFrame = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val events = Tables.events(spark, sfDir)
-    val allRecs = StreamImport.toRecs(events).collect().sortBy(_.event_id)
-    // feed in three arbitrary chunks to force incremental folding;
-    // bounded=false: exact replay under arbitrary disorder needs the
-    // unbounded fold (the watermark is a bound on tolerated disorder)
     val stream = MemoryStream[Rec]
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_upsert_").toString + "/t"
-    val q = StreamImport.transfersStream(stream.toDF(), bounded = false)
-      .toDF()
+    val sinkDir = java.nio.file.Files.createTempDirectory("graft_fold_").toString + "/t"
+    val merge = StreamImport.foldMerge(spec)
+    val q = StreamImport.entityStream(stream.toDF(), spec, watermark, horizonMs)
       .writeStream.outputMode("update")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_chk_").toString)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        TenantUpsertSink.upsert(sinkDir, b, "transfer_key")
+        java.nio.file.Files.createTempDirectory("graft_foldchk_").toString)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        TenantUpsertSink.upsert(sinkDir, b, "entity_key", Some(merge))
       }
       .start()
-    allRecs.grouped(math.max(allRecs.length / 3, 1)).foreach { chunk =>
-      stream.addData(chunk.toIndexedSeq)
+    chunks.foreach { chunk =>
+      stream.addData(chunk)
       q.processAllAvailable()
     }
     q.stop()
-    val streamed = TenantUpsertSink.readCurrent(spark, sinkDir).get
+    TenantUpsertSink.readCurrent(spark, sinkDir).get
+      .select(explode(col("rows")).as("r")).select("r.*")
+  }
+
+  test("stream_import over micro-batches equals the batch transfers entity") {
+    val allRecs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect().sortBy(_.event_id)
+    // three arbitrary chunks force incremental folding
+    val streamed = foldedRows(StreamImport.transferFold,
+      allRecs.grouped(math.max(allRecs.length / 3, 1)).map(_.toSeq))
       .orderBy("transfer_key").collect()
     val batch = ImporterCore.impEntityTransfers(spark, sfDir).collect()
     assert(streamed.length == batch.length)
@@ -69,32 +88,15 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream_txnreq: RANDOMIZED arrival order still equals the batch entity") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val recs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect()
     // deterministic shuffle: last-write-wins must be decided by event
     // ORD, not arrival order
     val shuffled = new scala.util.Random(7).shuffle(recs.toVector)
-    val stream = MemoryStream[StreamImport.Rec]
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_txn_").toString + "/t"
-    val q = StreamImport.txnreqStream(stream.toDF(), bounded = false).toDF()
-      .withColumn("tenant", concat(lit("t"), col("txn_key") % 10))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_txnchk_").toString)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        TenantUpsertSink.upsert(sinkDir, b, "txn_key")
-      }
-      .start()
-    shuffled.grouped(math.max(shuffled.length / 4, 1)).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop()
     val txnCols = Seq("txn_key", "state", "started_ms", "completed_ms", "amount",
       "auth_type", "payer_dfsp_id", "payee_dfsp_id",
       "initiator_type", "scenario", "n_events")
-    val streamed = graft.streaming.TenantUpsertSink.readCurrent(spark, sinkDir).get
+    val streamed = foldedRows(StreamImport.txnreqFold,
+      shuffled.grouped(math.max(shuffled.length / 4, 1)))
       .select(txnCols.map(col): _*)
       .orderBy("txn_key").collect()
     val batch = ImporterCore.impEntityTxnreq(spark, sfDir)
@@ -107,25 +109,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream_wide: out-of-order arrivals keep the last-write nested-JSON picks") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val recs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect()
     val shuffled = new scala.util.Random(13).shuffle(recs.toVector)
-    val stream = MemoryStream[StreamImport.Rec]
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_wide_").toString + "/t"
-    val q = StreamImport.wideStream(stream.toDF(), bounded = false).toDF()
-      .writeStream.outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_widechk_").toString)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        TenantUpsertSink.upsert(sinkDir, b, "transfer_key")
-      }
-      .start()
-    shuffled.grouped(math.max(shuffled.length / 4, 1)).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop()
     val cols = Seq("transfer_key", "payer_party_id", "payer_id_type",
       "payee_party_id", "payee_id_type", "amount", "currency",
       "transaction_id", "payer_dfsp_id", "payee_dfsp_id",
@@ -133,7 +118,8 @@ class StreamingSpec extends SparkSpec {
       "payer_fee", "payer_fee_currency", "payer_quote_code",
       "payee_fee", "payee_fee_currency", "payee_quote_code",
       "error_information", "status")
-    val streamed = TenantUpsertSink.readCurrent(spark, sinkDir).get
+    val streamed = foldedRows(StreamImport.wideFold,
+      shuffled.grouped(math.max(shuffled.length / 4, 1)))
       .select(cols.map(col): _*).orderBy("transfer_key").collect()
     val batch = ImporterCore.impEntityWide(spark, sfDir)
       .select(cols.map(col): _*).collect()
@@ -148,8 +134,9 @@ class StreamingSpec extends SparkSpec {
     // stops; run 2 is a NEW query on the SAME checkpoint that must
     // (a) recover the per-key fold state from the state store,
     // (b) skip the files run 1 already committed, and
-    // (c) land the union result through the idempotent sink —
-    // final table == the batch entity over the full corpus.
+    // (c) land the union result through the idempotent merging sink —
+    // final table == the batch entity over the full corpus. Arrival is
+    // by event id, not event time, under the no-late watermark.
     import spark.implicits._
     val recs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect()
       .sortBy(_.event_id)
@@ -158,15 +145,16 @@ class StreamingSpec extends SparkSpec {
     val inDir = s"$work/in"
     val chkDir = s"$work/chk"
     val sinkDir = s"$work/sink"
+    val merge = StreamImport.foldMerge(StreamImport.transferFold)
     def runOnce(): Unit = {
       val stream = spark.readStream
         .schema(spark.createDataset(recs.toIndexedSeq).toDF().schema)
         .parquet(inDir)
-      val q = StreamImport.transfersStream(stream, bounded = false).toDF()
+      val q = StreamImport.entityStream(stream, StreamImport.transferFold, NoLate)
         .writeStream.outputMode("update")
         .option("checkpointLocation", chkDir)
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          TenantUpsertSink.upsert(sinkDir, b, "transfer_key")
+          TenantUpsertSink.upsert(sinkDir, b, "entity_key", Some(merge))
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -179,6 +167,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(inDir)
     runOnce() // run 2: fresh query, same checkpoint — resumes, not reprocesses
     val streamed = TenantUpsertSink.readCurrent(spark, sinkDir).get
+      .select(explode(col("rows")).as("r")).select("r.*")
       .select("transfer_key", "tenant", "started_ms", "completed_ms",
         "amount", "last_click_value", "status", "n_events")
       .orderBy("transfer_key").collect()
@@ -213,7 +202,7 @@ class StreamingSpec extends SparkSpec {
       val stream = spark.readStream
         .schema(spark.createDataset(recs.toIndexedSeq).toDF().schema)
         .parquet(inDir)
-      val q = StreamImport.transfersStream(stream) // bounded DEFAULT
+      val q = StreamImport.entityStream(stream, StreamImport.transferFold) // production defaults
         .writeStream.outputMode("update")
         .option("checkpointLocation", chkDir)
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -465,7 +454,7 @@ class StreamingSpec extends SparkSpec {
       .sortBy(_.event_id)
     val stream = MemoryStream[Rec]
     val got = scala.collection.mutable.Set.empty[(Long, Long)]
-    val q = StreamImport.joinStream(stream.toDF())
+    val q = StreamImport.joinStream(stream.toDF(), "inner")
       .select("click_id", "purchase_id")
       .writeStream.outputMode("append")
       .option("checkpointLocation",
@@ -598,13 +587,16 @@ class StreamingSpec extends SparkSpec {
   test("stream_dedup over micro-batches equals batch DISTINCT") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
+    // event-time order: no row is late, while keys expire behind the
+    // gate's horizon and re-emit — the keyed sink collapses them
     val recs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect()
+      .sortBy(r => (r.ts_ms, r.event_id))
     val stream = MemoryStream[Rec]
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_dedup_").toString + "/t"
-    val q = StreamImport.dedupStream(stream.toDF())
+    val q = StreamImport.dedupStream(stream.toDF(), StreamImport.FoldWatermark)
       .withColumn("dedup_key", concat(col("user_id"), lit("_"), col("event_type")))
       .withColumn("tenant", concat(lit("t"), col("user_id") % 10))
-      .writeStream.outputMode("update")
+      .writeStream.outputMode("append")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_dedupchk_").toString)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -632,7 +624,7 @@ class StreamingSpec extends SparkSpec {
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_dedupw_").toString + "/t"
     val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
     val t0 = 1700000000000L
-    val q = StreamImport.dedupStreamBounded(stream.toDF(), "5 minutes")
+    val q = StreamImport.dedupStream(stream.toDF(), "5 minutes")
       .withColumn("dedup_key", concat(col("user_id"), lit("_"), col("event_type")))
       .withColumn("tenant", concat(lit("t"), col("user_id") % 10))
       .writeStream.outputMode("append")
@@ -668,7 +660,7 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[Rec]
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_bnd_").toString + "/t"
     val merge = StreamImport.foldMerge(StreamImport.transferFold)
-    val q = StreamImport.transfersStream(stream.toDF()) // bounded DEFAULT
+    val q = StreamImport.entityStream(stream.toDF(), StreamImport.transferFold) // production defaults
       .writeStream.outputMode("update")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_bndchk_").toString)
@@ -717,7 +709,7 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[Rec]
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_inc_").toString + "/t"
     val merge = StreamImport.foldMerge(StreamImport.transferFold)
-    val q = StreamImport.transfersStream(stream.toDF())
+    val q = StreamImport.entityStream(stream.toDF(), StreamImport.transferFold)
       .writeStream.outputMode("update")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_incchk_").toString)
@@ -801,36 +793,16 @@ class StreamingSpec extends SparkSpec {
     // sink table must STILL equal the batch fold — eviction is
     // invisible downstream because the sink merge reunites every
     // incarnation's contribution.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val recs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect()
       .sortBy(r => (r.ts_ms, r.event_id))
-    def run(build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-        merge: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val stream = MemoryStream[Rec]
-      val sinkDir = java.nio.file.Files.createTempDirectory("graft_tiny_").toString + "/t"
-      val q = build(stream.toDF())
-        .writeStream.outputMode("update")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_tinychk_").toString)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          TenantUpsertSink.upsert(sinkDir, b, "entity_key", Some(merge))
-        }
-        .start()
-      recs.grouped(math.max(recs.length / 6, 1)).foreach { chunk =>
-        stream.addData(chunk.toIndexedSeq)
-        q.processAllAvailable()
-      }
-      // evictions triggered by the final chunk's watermark need one
-      // more (empty-data) batch to fire; harmless for the assertion
-      q.stop()
-      TenantUpsertSink.readCurrent(spark, sinkDir).get
-        .select(explode(col("rows")).as("r")).select("r.*")
-    }
+    // evictions triggered by the final chunk's watermark need one more
+    // (empty-data) batch to fire; harmless for the assertion
+    def run[S <: Product : TypeTag, O <: Product : TypeTag](
+        spec: StreamImport.EntityFold[S, O]): DataFrame =
+      foldedRows(spec, recs.grouped(math.max(recs.length / 6, 1)).map(_.toSeq),
+        watermark = "0 seconds", horizonMs = 60000L)
     // transfers: min/max/sum/or + last-write click
-    val streamed = run(
-      df => StreamImport.transfersStream(df, bounded = true, watermark = "0 seconds", horizonMs = 60000L),
-      StreamImport.foldMerge(StreamImport.transferFold))
+    val streamed = run(StreamImport.transferFold)
       .select("transfer_key", "tenant", "started_ms", "completed_ms",
         "amount", "last_click_value", "status", "n_events")
       .orderBy("transfer_key").collect()
@@ -841,9 +813,7 @@ class StreamingSpec extends SparkSpec {
     }
     // top-n: the selection monoid must reunite boards split across
     // incarnations (top entries arrive in ts order, not value order)
-    val topStreamed = run(
-      df => StreamImport.topnStream(df, bounded = true, watermark = "0 seconds", horizonMs = 60000L),
-      StreamImport.foldMerge(StreamImport.topnFold))
+    val topStreamed = run(StreamImport.topnFold)
       .select("user_id", "rnk", "event_id", "event_type")
       .orderBy("user_id", "rnk").collect()
     val topBatch = graft.operators.Analytics.qWindowTopN(spark, sfDir).collect()
@@ -861,9 +831,7 @@ class StreamingSpec extends SparkSpec {
       "payer_fee", "payer_fee_currency", "payer_quote_code",
       "payee_fee", "payee_fee_currency", "payee_quote_code",
       "error_information", "status")
-    val wideStreamed = run(
-      df => StreamImport.wideStream(df, bounded = true, watermark = "0 seconds", horizonMs = 60000L),
-      StreamImport.foldMerge(StreamImport.wideFold))
+    val wideStreamed = run(StreamImport.wideFold)
       .select(wideCols.map(col): _*).orderBy("transfer_key").collect()
     val wideBatch = ImporterCore.impEntityWide(spark, sfDir)
       .select(wideCols.map(col): _*).collect()
@@ -877,11 +845,11 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val t0 = 1700000000000L
-    val builders = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-      "txnreq" -> (df => StreamImport.txnreqStream(df).toDF()),
-      "batches" -> (df => StreamImport.batchesStream(df).toDF()),
-      "wide" -> (df => StreamImport.wideStream(df).toDF()),
-      "topn" -> (df => StreamImport.topnStream(df).toDF()))
+    val builders = Seq[(String, DataFrame => DataFrame)](
+      "txnreq" -> (df => StreamImport.entityStream(df, StreamImport.txnreqFold)),
+      "batches" -> (df => StreamImport.entityStream(df, StreamImport.batchFold)),
+      "wide" -> (df => StreamImport.entityStream(df, StreamImport.wideFold)),
+      "topn" -> (df => StreamImport.entityStream(df, StreamImport.topnFold)))
     for ((name, build) <- builders) {
       val stream = MemoryStream[Rec]
       val q = build(stream.toDF())
@@ -907,30 +875,12 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream_topn: displaced leaderboard entries are overwritten across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val recs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect()
-    // adversarial order: later chunks must DISPLACE earlier top rows,
-    // exercising the stable-(user, rank)-key overwrite path
+    // adversarial order: later chunks must DISPLACE earlier top rows —
+    // the merging sink re-renders a user's whole board per batch
     val shuffled = new scala.util.Random(13).shuffle(recs.toVector)
-    val stream = MemoryStream[StreamImport.Rec]
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_topn_").toString + "/t"
-    val q = StreamImport.topnStream(stream.toDF(), bounded = false).toDF()
-      .withColumn("top_key", concat(col("user_id"), lit("_"), col("rnk")))
-      .withColumn("tenant", concat(lit("t"), col("user_id") % 10))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_topnchk_").toString)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        TenantUpsertSink.upsert(sinkDir, b, "top_key")
-      }
-      .start()
-    shuffled.grouped(math.max(shuffled.length / 4, 1)).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = TenantUpsertSink.readCurrent(spark, sinkDir).get
+    val streamed = foldedRows(StreamImport.topnFold,
+      shuffled.grouped(math.max(shuffled.length / 4, 1)))
       .select("user_id", "rnk", "event_id", "event_type")
       .orderBy("user_id", "rnk").collect()
     val batch = graft.operators.Analytics.qWindowTopN(spark, sfDir).collect()
@@ -1259,10 +1209,13 @@ class StreamingSpec extends SparkSpec {
   test("stream_window over micro-batches equals the batch hour buckets") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
+    // event-time order: no row is late, while windows close behind the
+    // gate's horizon
     val recs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect()
+      .sortBy(r => (r.ts_ms, r.event_id))
     val stream = MemoryStream[Rec]
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_win_").toString + "/t"
-    val q = StreamImport.windowStream(stream.toDF())
+    val q = StreamImport.windowStream(stream.toDF(), StreamImport.FoldWatermark)
       .select(col("event_type"),
         expr("unix_millis(window.start) div 3600000").as("window_h"),
         col("n"), graft.functions.Portable.moneyStr(col("sv")).as("sum_value"))
@@ -1299,7 +1252,7 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[Rec]
     val out = scala.collection.mutable.Map.empty[(String, Long), (Long, String)]
     val t0 = 1700000000000L // window-aligned enough: any fixed epoch
-    val q = StreamImport.windowStreamBounded(stream.toDF(), "30 minutes")
+    val q = StreamImport.windowStream(stream.toDF(), "30 minutes")
       .select(col("event_type"),
         expr("unix_millis(window.start) div 3600000").as("window_h"),
         col("n"), graft.functions.Portable.moneyStr(col("sv")).as("sum_value"))
@@ -1445,16 +1398,20 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_derby_").toString)
     val url = "jdbc:derby:memory:graftjdbc;create=true"
     val recs = StreamImport.toRecs(Tables.events(spark, sfDir)).collect().sortBy(_.event_id)
+    val spec = StreamImport.transferFold
+    val merge = StreamImport.foldMerge(spec)
     val stream = MemoryStream[Rec]
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_jdbc_").toString + "/t"
-    val q = StreamImport.transfersStream(stream.toDF(), bounded = false).toDF()
+    val q = StreamImport.entityStream(stream.toDF(), spec, NoLate)
       .writeStream.outputMode("update")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_jdbcchk_").toString)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        // the SAME micro-batch through both arms of the sink contract
-        TenantUpsertSink.upsert(sinkDir, b, "transfer_key")
-        JdbcUpsert.upsert(url, "TRANSFERS", b, "transfer_key")
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        // the SAME micro-batch through both arms of the sink contract,
+        // from one evaluation of the stateful plan
+        val once = b.localCheckpoint()
+        TenantUpsertSink.upsert(sinkDir, once, "entity_key", Some(merge))
+        StreamImport.jdbcFoldUpsert(url, "TRANSFERS", spec)(once, id)
       }
       .start()
     recs.grouped(math.max(recs.length / 3, 1)).foreach { chunk =>
@@ -1462,13 +1419,16 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
     }
     q.stop()
-    val mirror = TenantUpsertSink.readCurrent(spark, sinkDir).get
-    val cols = mirror.columns.sorted
-    val tenants = mirror.select("tenant").distinct().collect().map(_.getString(0)).toSeq
-    val viaParquet = mirror.select(cols.head, cols.tail: _*)
-      .orderBy("transfer_key").collect()
-    def jdbcRows() = JdbcUpsert.readCurrent(spark, url, "TRANSFERS", tenants)
-      .select(cols.head, cols.tail: _*).orderBy("transfer_key").collect()
+    // the incarnation marks and the rendered entity row, per key
+    def rendered(sunk: DataFrame) = sunk
+      .select(col("entity_key"), col("inc_ts"), col("inc_id"), explode(col("rows")).as("r"))
+      .select(col("entity_key"), col("inc_ts"), col("inc_id"), col("r.*"))
+      .orderBy("entity_key").collect()
+    val viaParquet = rendered(TenantUpsertSink.readCurrent(spark, sinkDir).get)
+    val schema = org.apache.spark.sql.Encoders
+      .product[StreamImport.SinkRow[StreamImport.TransferRow, StreamImport.St]].schema
+    val tenants = JdbcUpsert.tenantsOf(url, "TRANSFERS")
+    def jdbcRows() = rendered(StreamImport.jdbcFoldRead(spark, url, "TRANSFERS", schema, tenants))
     val viaJdbc = jdbcRows()
     assert(viaJdbc.length == viaParquet.length && viaJdbc.nonEmpty)
     viaJdbc.zip(viaParquet).foreach { case (j, p) =>
@@ -1478,7 +1438,7 @@ class StreamingSpec extends SparkSpec {
     // contents as a batch changes nothing
     val cur = JdbcUpsert.readCurrent(spark, url, "TRANSFERS", tenants).cache()
     cur.count() // materialize before re-writing the same tables
-    JdbcUpsert.upsert(url, "TRANSFERS", cur, "transfer_key")
+    JdbcUpsert.upsert(url, "TRANSFERS", cur, "entity_key")
     cur.unpersist()
     assert(jdbcRows().map(_.toSeq).toSeq == viaJdbc.map(_.toSeq).toSeq)
   }
@@ -1497,7 +1457,7 @@ class StreamingSpec extends SparkSpec {
     val base = "TRANSFERS_FOLD"
     val t0 = 1700000000000L
     val stream = MemoryStream[Rec]
-    val q = StreamImport.transfersStream(stream.toDF()) // bounded default
+    val q = StreamImport.entityStream(stream.toDF(), StreamImport.transferFold) // production defaults
       .writeStream.outputMode("update")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_jfoldchk_").toString)
@@ -1540,7 +1500,7 @@ class StreamingSpec extends SparkSpec {
     val base = "WIDE_FOLD"
     val t0 = 1700000000000L
     val stream = MemoryStream[Rec]
-    val q = StreamImport.wideStream(stream.toDF()) // bounded default
+    val q = StreamImport.entityStream(stream.toDF(), StreamImport.wideFold) // production defaults
       .writeStream.outputMode("update")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_jwidechk_").toString)
@@ -1932,7 +1892,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val t0 = 1704067200000L
     val stream = MemoryStream[Rec]
-    val q = StreamImport.joinOuterStream(stream.toDF())
+    val q = StreamImport.joinStream(stream.toDF(), "left_outer")
       .select(col("click_id"), col("purchase_id"), col("user_id"))
       .writeStream.outputMode("append").format("memory").queryName("oj_out")
       .option("checkpointLocation",
@@ -1963,6 +1923,20 @@ class StreamingSpec extends SparkSpec {
     assert(out().contains((1L, None)),
       s"closed window did not null-extend the unmatched click: ${out()}")
     q.stop()
+  }
+
+  test("gate runner: a query that fails to start leaves no listener on the session") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val before = spark.streams.listListeners().toSet
+    val stream = MemoryStream[Rec]
+    // a stream-stream join runs in append mode only: start() rejects update
+    val frame = StreamImport.joinStream(stream.toDF(), "inner")
+      .withColumn("pair_key", concat(col("click_id"), lit("_"), col("purchase_id")))
+      .withColumn("tenant", concat(lit("t"), col("user_id") % 10))
+    intercept[org.apache.spark.sql.AnalysisException](
+      StreamImport.runStreamToSink(spark, "start_fails", frame, "pair_key", mode = "update"))
+    assert(spark.streams.listListeners().toSet == before)
   }
 
   test("preFold: partials merge to the exact fold; flush cap bounds the map") {
@@ -2014,7 +1988,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val stream = MemoryStream[Rec]
       val sinkDir = java.nio.file.Files.createTempDirectory("graft_skew_").toString + "/t"
-      val q = StreamImport.transfersStream(stream.toDF(), bounded = true)
+      val q = StreamImport.entityStream(stream.toDF(), StreamImport.transferFold)
         .writeStream.outputMode("update")
         .option("checkpointLocation",
           java.nio.file.Files.createTempDirectory("graft_skewchk_").toString)
