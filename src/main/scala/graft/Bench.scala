@@ -237,10 +237,12 @@ object Bench {
     // code untouched since r4 — its absolute time is a pure machine
     // probe. Runs OUTSIDE the sweep selection so BENCH_ONLY / FAMILY
     // subset artifacts carry the guard too. Protocol at EACH end: one
-    // discarded warm run, then min of 2 measured — the first canary of
-    // a session pays cold page-cache + codegen (3.4× at sf1 in the
-    // shakedown run), which is warm-up, not contention; min-of-2 after
-    // a warm run probes only the machine.
+    // discarded warm run, then min of 2 measured — the first canary
+    // run of the JVM pays cold page-cache + codegen (3.4× at sf1 in the
+    // shakedown run), which is warm-up, not contention; compiled code
+    // lives for the JVM, not the child session (Graft.codegenConfs),
+    // so later canary runs reuse it. Min-of-2 after a warm run probes
+    // only the machine.
     // ---- cross-run environment anchor (r16 verdict item 7) ----------
     // The canary below is an A/B against ITSELF within one sweep, so a
     // slow-but-STABLE host passes it: the r16 sf1 record was drawn on
@@ -321,11 +323,14 @@ object Bench {
       // survive query stop and inflated later stream queries up to
       // 4.6×), and force a GC cycle so the ContextCleaner reclaims
       // dead shuffle files — then run the query in a FRESH child
-      // session (own SQL conf/cache/temp state, shared executors and
-      // file-listing warmup) into a noop sink (materializes EVERY
-      // column and keeps the final sort in the plan — count() would
-      // let Catalyst prune the aggregates and EliminateSorts drop the
-      // orderBy, timing a fraction of the real query).
+      // session (own SQL conf/cache/temp state and registered
+      // functions; shared executors, file-listing warmup and compiled
+      // code, see Graft.codegenConfs: reps after the first reuse the
+      // classes the first one compiled) into a noop sink
+      // (materializes EVERY column and keeps the final sort in the
+      // plan — count() would let Catalyst prune the aggregates and
+      // EliminateSorts drop the orderBy, timing a fraction of the real
+      // query).
       //
       // STREAM family runs at bench-scale state partitioning: its
       // wall time is micro-batch machinery (state-store commits ×

@@ -37,8 +37,40 @@ object Graft {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true")
 
-  /** A session with graft's confs: [[stateStoreConfs]], and `file:`
-    * paths through [[LocalFs]] ([[LocalFs.confs]], the two
+  /** How long compiled code lives: for the JVM, not for one session.
+    *
+    * Spark 4.1's `CodeGenerator.cache` is keyed by (class loader,
+    * generated source). Classic sessions isolate their artifacts by
+    * default, so every session, and every streaming query's clone of
+    * one, runs its tasks under a class loader of its own. A restarted
+    * import loop then misses the cache on every class: it recompiles
+    * each one through janino, loads it again and runs it cold.
+    *
+    *  - `spark.sql.artifact.isolation.enabled=false`: tasks of every
+    *    graft session run under the executor's default class loader,
+    *    so the cache key is the source alone. This relies on one
+    *    condition: graft adds no session artifacts (jars, class files)
+    *    and serves no Spark Connect clients, the only users that
+    *    artifact isolation protects.
+    *  - `spark.sql.codegen.cache.maxEntries` (a static conf, read at
+    *    the JVM's first code generation; Spark's default is 100): with
+    *    isolation off alone, an import loop restarted after the six
+    *    entity builds ran in the same JVM still recompiled 54 classes
+    *    at sf0.001, because the 100-entry LRU had evicted them. Counted
+    *    with the cache unbounded, one perfbench JVM compiles 112
+    *    distinct classes on `import_drain` (warm-up, timed rounds,
+    *    reads) and 82 on `entity_backfill`, and a `graft.Verify` sweep
+    *    of all 155 queries 2 093. 1 000 holds the importer's classes
+    *    several times over without pinning every class a full sweep
+    *    compiles.
+    */
+  val codegenConfs: Seq[(String, String)] = Seq(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
+  /** A session with graft's confs: [[stateStoreConfs]], [[codegenConfs]]
+    * (compiled classes shared by every session and streaming query of
+    * the JVM), and `file:` paths through [[LocalFs]] ([[LocalFs.confs]], the two
     * `spark.hadoop.fs.*` entries). Spark's distribution ships no
     * libhadoop, so Hadoop's local filesystem shells out: its
     * `setPermission` forks `chmod` and its `getFileLinkStatus` forks
@@ -64,6 +96,7 @@ object Graft {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config(stateStoreConfs.toMap)
       .config(LocalFs.confs.toMap)
+      .config(codegenConfs.toMap)
       .config("spark.ui.enabled", "false")
       // scratch backend selection (see graft.Scratch): set as a
       // BUILDER conf so Bench/Verify's per-query child sessions

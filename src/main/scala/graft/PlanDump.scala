@@ -65,8 +65,9 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try {
-        // fresh child session per query — same isolation as Bench.timeOne,
-        // so streaming-composition confs (import_loop) don't leak across
+        // fresh child session per query, as in Bench.timeOne: SQL confs
+        // and registered functions are its own, so streaming-composition
+        // confs (import_loop) don't leak across; compiled code is shared
         val session = spark.newSession()
         functions.GraftFunctions.register(session)
         val df = SparkEntry.queries(name)(session, sfDir)

@@ -17,6 +17,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options, Path,
   RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** [[LocalFs]] against Hadoop's own `RawLocalFileSystem`, the spec
   * session's production confs, and the process starts of one
@@ -121,6 +122,24 @@ class LocalFsSpec extends SparkSpec {
     // the session's FileSystem cache holds the graft binding
     assert(FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
       .isInstanceOf[NioLocalFileSystem])
+    // the codegen confs hold on the session, on a child session (the one
+    // Bench and PlanDump open per query) and on a running stream's clone
+    val keys = Graft.codegenConfs.map(_._1)
+    val want = Graft.codegenConfs.map(_._2)
+    assert(keys.map(spark.conf.get) == want)
+    assert(keys.map(spark.newSession().conf.get) == want)
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Int]
+    input.addData(1, 2, 3)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val q = input.toDF().writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        seen.add(keys.map(b.sparkSession.conf.get)); ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(!seen.isEmpty && seen.asScala.forall(_ == want), seen)
   }
 
   test("one import-loop micro-batch on RocksDB and one ImporterCore write start no chmod and no readlink") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{ImporterCore, Multimodal}
 import graft.streaming.{JdbcUpsert, OutOfOrder, StreamImport, TenantUpsertSink}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -1923,6 +1924,23 @@ class StreamingSpec extends SparkSpec {
     assert(out().contains((1L, None)),
       s"closed window did not null-extend the unmatched click: ${out()}")
     q.stop()
+  }
+
+  test("a restarted import loop compiles no generated class again and lands the same rows") {
+    // Graft.codegenConfs: a new query's cloned session shares the
+    // executor's class loader with the last one, and the codegen cache
+    // still holds every class the last run compiled, also after the
+    // six entity builds ran in the same JVM between the two runs
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val first = StreamImport.runImportLoopToCompletion(spark, sfDir).collect().toSeq
+    Seq(ImporterCore.impEntityTransfers _, ImporterCore.impEntityWide _,
+      ImporterCore.impEntityTxnreq _, ImporterCore.impEntityBatches _,
+      ImporterCore.impVariables _, ImporterCore.impTasks _)
+      .foreach(build => build(spark, sfDir).write.format("noop").mode("overwrite").save())
+    val before = compiles.getCount
+    val second = StreamImport.runImportLoopToCompletion(spark, sfDir).collect().toSeq
+    assert(compiles.getCount - before == 0, "classes compiled by the restarted run")
+    assert(first.nonEmpty && second == first)
   }
 
   test("gate runner: a query that fails to start leaves no listener on the session") {
