@@ -37,6 +37,21 @@ object Bench {
     */
   val DegradedRatio: Double = 1.5
 
+  /** The child session each run of a machine probe (the anchor, the
+    * canary) is timed in. It keeps Spark's per-session artifact
+    * isolation, which [[Graft.codegenConfs]] turns off for every other
+    * session: [[AnchorBand]] and the [[canaryContended]] bars were set
+    * on runs that each compiled their classes under a class loader of
+    * their own, so a run that reused the last run's classes would read
+    * a slow host as a faster class. Set before the session's first
+    * query: Spark reads it once per session.
+    */
+  def probeSession(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.artifact.isolation.enabled", "true")
+    s
+  }
+
   def anchorClassOf(secs: Double): String =
     if (secs < 0) "unknown"
     else if (secs > AnchorBand._2) "slow"
@@ -212,13 +227,13 @@ object Bench {
     var gcTimedSec = 0.0
     def timeOne(name: String, streamQ: Boolean,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        streamParts: Int): Double = {
+        streamParts: Int, probe: Boolean = false): Double = {
       Scratch.releaseAll()
       spark.catalog.clearCache()
       org.apache.spark.sql.execution.streaming.state.StateStore.stop()
       System.gc()
       Thread.sleep(150)
-      val session = spark.newSession()
+      val session = if (probe) probeSession(spark) else spark.newSession()
       functions.GraftFunctions.register(session)
       if (streamQ) session.conf.set("spark.sql.shuffle.partitions", streamParts)
       val gcT0 = gcTotalSec()
@@ -239,10 +254,8 @@ object Bench {
     // subset artifacts carry the guard too. Protocol at EACH end: one
     // discarded warm run, then min of 2 measured — the first canary
     // run of the JVM pays cold page-cache + codegen (3.4× at sf1 in the
-    // shakedown run), which is warm-up, not contention; compiled code
-    // lives for the JVM, not the child session (Graft.codegenConfs),
-    // so later canary runs reuse it. Min-of-2 after a warm run probes
-    // only the machine.
+    // shakedown run; see Graft.codegenConfs), which is warm-up, not
+    // contention; min-of-2 after a warm run probes only the machine.
     // ---- cross-run environment anchor (r16 verdict item 7) ----------
     // The canary below is an A/B against ITSELF within one sweep, so a
     // slow-but-STABLE host passes it: the r16 sf1 record was drawn on
@@ -260,7 +273,7 @@ object Bench {
     // drift is visible in every committed record without any A/B, and
     // the round chain's keep-best guard refuses anchor-slow draws.
     def anchorOnce(): Double = {
-      val s = spark.newSession()
+      val s = probeSession(spark)
       val t0 = System.nanoTime()
       s.range(0L, 20000000L, 1L, 32)
         .selectExpr("pmod(hash(id), 100000) AS k", "id % 1000 AS v")
@@ -278,9 +291,9 @@ object Bench {
     val canaryName = "q6_forecast"
     val canaryFn = SparkEntry.queries.get(canaryName)
     def canaryProbe(): Double = canaryFn.map { f =>
-      timeOne(canaryName, streamQ = false, f, 0) // warm, discarded
-      val a = timeOne(canaryName, streamQ = false, f, 0)
-      val b = timeOne(canaryName, streamQ = false, f, 0)
+      timeOne(canaryName, streamQ = false, f, 0, probe = true) // warm, discarded
+      val a = timeOne(canaryName, streamQ = false, f, 0, probe = true)
+      val b = timeOne(canaryName, streamQ = false, f, 0, probe = true)
       if (a < 0 || b < 0) -1.0 else math.min(a, b)
     }.getOrElse(-1.0)
     val loadStart = loadavg1m()
@@ -325,12 +338,10 @@ object Bench {
       // dead shuffle files — then run the query in a FRESH child
       // session (own SQL conf/cache/temp state and registered
       // functions; shared executors, file-listing warmup and compiled
-      // code, see Graft.codegenConfs: reps after the first reuse the
-      // classes the first one compiled) into a noop sink
-      // (materializes EVERY column and keeps the final sort in the
-      // plan — count() would let Catalyst prune the aggregates and
-      // EliminateSorts drop the orderBy, timing a fraction of the real
-      // query).
+      // code, see Graft.codegenConfs) into a noop sink (materializes
+      // EVERY column and keeps the final sort in the plan — count()
+      // would let Catalyst prune the aggregates and EliminateSorts drop
+      // the orderBy, timing a fraction of the real query).
       //
       // STREAM family runs at bench-scale state partitioning: its
       // wall time is micro-batch machinery (state-store commits ×

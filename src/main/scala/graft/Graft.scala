@@ -42,16 +42,23 @@ object Graft {
     * Spark 4.1's `CodeGenerator.cache` is keyed by (class loader,
     * generated source). Classic sessions isolate their artifacts by
     * default, so every session, and every streaming query's clone of
-    * one, runs its tasks under a class loader of its own. A restarted
-    * import loop then misses the cache on every class: it recompiles
-    * each one through janino, loads it again and runs it cold.
+    * one, runs its tasks under a class loader of its own. A query
+    * started again in the same JVM (an import loop restarted in
+    * process, a harness round, a Bench rep, a spec) then misses the
+    * cache on every class: it recompiles each one through janino,
+    * loads it again and runs it cold. With these entries it reuses the
+    * classes an earlier query compiled. The first query of a fresh JVM
+    * (a catch-up after a deploy or a process restart) still compiles
+    * every class: the cache starts empty.
     *
     *  - `spark.sql.artifact.isolation.enabled=false`: tasks of every
     *    graft session run under the executor's default class loader,
     *    so the cache key is the source alone. This relies on one
     *    condition: graft adds no session artifacts (jars, class files)
     *    and serves no Spark Connect clients, the only users that
-    *    artifact isolation protects.
+    *    artifact isolation protects. Bench's machine probes turn it
+    *    back on ([[Bench.probeSession]]): their bars were set on runs
+    *    that each compiled their own classes.
     *  - `spark.sql.codegen.cache.maxEntries` (a static conf, read at
     *    the JVM's first code generation; Spark's default is 100): with
     *    isolation off alone, an import loop restarted after the six
@@ -69,8 +76,7 @@ object Graft {
     "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** A session with graft's confs: [[stateStoreConfs]], [[codegenConfs]]
-    * (compiled classes shared by every session and streaming query of
-    * the JVM), and `file:` paths through [[LocalFs]] ([[LocalFs.confs]], the two
+    * and `file:` paths through [[LocalFs]] ([[LocalFs.confs]], the two
     * `spark.hadoop.fs.*` entries). Spark's distribution ships no
     * libhadoop, so Hadoop's local filesystem shells out: its
     * `setPermission` forks `chmod` and its `getFileLinkStatus` forks

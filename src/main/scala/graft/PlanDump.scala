@@ -68,6 +68,7 @@ object PlanDump {
         // fresh child session per query, as in Bench.timeOne: SQL confs
         // and registered functions are its own, so streaming-composition
         // confs (import_loop) don't leak across; compiled code is shared
+        // (Graft.codegenConfs)
         val session = spark.newSession()
         functions.GraftFunctions.register(session)
         val df = SparkEntry.queries(name)(session, sfDir)

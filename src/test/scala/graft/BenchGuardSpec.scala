@@ -1,10 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
 
-/** Pins the two pure environment-guard rules every committed BENCH
-  * artifact's stamps derive from, so a threshold edit is a visible
-  * spec change rather than a silent protocol drift:
+/** Pins the environment-guard rules every committed BENCH artifact's
+  * stamps derive from, so a threshold or protocol edit is a visible
+  * spec change rather than a silent drift:
   *
   *  - [[Bench.anchorClassOf]] — the three-level absolute host class
   *    (r17 verdict item 2: ok / degraded / slow, plus fast + unknown),
@@ -12,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - [[Bench.canaryContended]] — the direction-aware within-sweep
   *    verdict (r18): end-slow = degradation at the tight 1.5× bar;
   *    start-slow = JVM maturation, trips only beyond 2.5×.
+  *  - [[Bench.probeSession]] — the session both probes are timed in
+  *    compiles its classes afresh, as the runs the bars were set on did.
   */
-class BenchGuardSpec extends AnyFunSuite {
+class BenchGuardSpec extends SparkSpec {
 
   test("anchorClassOf: five classes at the committed band edges") {
     assert(Bench.anchorClassOf(-1.0) == "unknown") // probe failed
@@ -52,5 +55,24 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!Bench.canaryContended(start = -1.0, end = 0.3))
     assert(!Bench.canaryContended(start = 0.3, end = -1.0))
     assert(!Bench.canaryContended(start = -1.0, end = -1.0))
+  }
+
+  test("probeSession: every probe run compiles its classes, as at calibration") {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    def compiled(s: SparkSession): Long = {
+      val before = compiles.getCount
+      s.range(0L, 100000L, 1L, 4)
+        .selectExpr("pmod(hash(id), 1000) AS k", "id % 1000 AS v")
+        .groupBy("k").sum("v")
+        .write.mode("overwrite").format("noop").save()
+      compiles.getCount - before
+    }
+    compiled(Bench.probeSession(spark)) // warm
+    assert(compiled(Bench.probeSession(spark)) > 0)
+    assert(compiled(Bench.probeSession(spark)) > 0)
+    // the contrast: a plain child session reuses the classes compiled
+    // before it (Graft.codegenConfs)
+    compiled(spark.newSession())
+    assert(compiled(spark.newSession()) == 0)
   }
 }

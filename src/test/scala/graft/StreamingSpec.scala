@@ -1927,10 +1927,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a restarted import loop compiles no generated class again and lands the same rows") {
-    // Graft.codegenConfs: a new query's cloned session shares the
-    // executor's class loader with the last one, and the codegen cache
-    // still holds every class the last run compiled, also after the
-    // six entity builds ran in the same JVM between the two runs
+    // Graft.codegenConfs; the entity builds in between would evict the
+    // first run's classes from Spark's default 100-entry cache
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val first = StreamImport.runImportLoopToCompletion(spark, sfDir).collect().toSeq
     Seq(ImporterCore.impEntityTransfers _, ImporterCore.impEntityWide _,
